@@ -3,7 +3,8 @@ package graft.cdc
 import graft.model.{CdcColumns => C, ListingMode, TableSpec}
 import graft.operators.{ChangeLogReducer, DiffEngine, SchemaChecker}
 import graft.sources.{CdcFileLister, ChangeLogReader}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 
 /** Job-level orchestration — the engine's equivalents of the reference's
   * two verbs on CDCOperator (src/cdc/cdc_operator.rs:26-251 snapshot,
@@ -158,7 +159,7 @@ object SnapshotJob {
         s"table ${table.name} has no primary key: CDC replay undefined, " +
           "use FullLoadOnly mode")
       import graft.model.{CdcColumns => C}
-      import org.apache.spark.sql.functions.{coalesce, col, lit}
+      import org.apache.spark.sql.functions.{coalesce, col}
       // NULL Op (drifted file without the column) counts as an insert —
       // same rule as ChangeLogReducer's null-safe delete filter
       log.filter(coalesce(col(C.Op), lit(C.OpInsert)) === C.OpInsert)
@@ -209,14 +210,17 @@ object SnapshotJob {
 
   /** Snapshot all selected tables under baseDir into parquet state dirs;
     * returns per-table row counts (the reference logs per-table timing
-    * and counts, cdc_operator.rs:218-228).
+    * and counts, cdc_operator.rs:218-228). Each count is observed on the
+    * written plan itself, so the output is never read back to count it.
     */
   def run(spark: SparkSession, cfg: CdcConfig, tables: Seq[TableSpec],
       outDir: String): Map[String, Long] =
     TablePool.map(tables, cfg.maxConcurrentTables) { t =>
+      val rows = new Observation()
       val state = reconstructTable(spark, cfg, t)
+        .observe(rows, count(lit(1)).as("rows"))
       writeState(state, cfg, t, outDir)
-      t.name -> spark.read.parquet(s"$outDir/${t.name}").count()
+      t.name -> rows.get("rows").asInstanceOf[Long]
     }.toMap
 
   /** Snapshot into a LIVE database — the reference's actual snapshot
@@ -260,13 +264,26 @@ object ValidateJob {
   }
 
   /** Row-exact validation of source vs reconstructed state for one table
-    * (the engine-native replacement for delegated pgdatadiff, D1+D2).
+    * (the engine-native replacement for delegated pgdatadiff): the
+    * per-status counts of `DiffEngine.rowDiff`, computed by
+    * `DiffEngine.rowStatus` from each side's cached narrow layout — pk
+    * columns and the exact payload hash `_xh`, never the payload. `_xh`
+    * hashes the values themselves, so a difference past the 6th decimal,
+    * which the digests' canonical `_rh` rounds away, still counts as a
+    * mismatch. A following [[validateByDigest]] on the same
+    * `source`/`target` digests from the same cache entries, so the pair
+    * reads each side once.
+    *
+    * Staleness is `chunkDigest`'s contract: file-backed sides re-key on
+    * their listing + length + mtime; a non-file side (JDBC) needs
+    * `CachedPlans.clear()` at a mutation boundary, as the CLI does
+    * between snapshot and validate.
     */
   def validateTable(source: DataFrame, target: DataFrame, table: TableSpec)
       : TableReport = {
-    val diff = DiffEngine.summarize(
-      DiffEngine.rowDiff(source, target, table.primaryKey))
-    val counts = diff.collect()
+    // per-status counts; no order needed, unlike `DiffEngine.summarize`
+    val counts = DiffEngine.rowStatus(source, target, table.primaryKey)
+      .groupBy(DiffEngine.StatusCol).count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     TableReport(table.name,
       counts.getOrElse("match", 0L), counts.getOrElse("only_left", 0L),
@@ -275,7 +292,9 @@ object ValidateJob {
 
   /** Digest-mode validation: compares per-chunk digests (chunkSize rows,
     * PK-ordered) and returns the ids of mismatching chunks — pgdatadiff's
-    * chunked early-exit economics (D2), distributed.
+    * chunked early-exit economics (D2), distributed. Reads the same cached
+    * per-side layouts as [[validateTable]], under the same staleness
+    * contract.
     *
     * `startChunk` resumes a previously-interrupted validation (the
     * reference's --start-position, main.rs:81-83): chunk ids are stable

@@ -211,7 +211,9 @@ object Main {
               val rep = ValidateJob.validateTable(source, target, s)
               // chunked-digest compare (the reference's pgdatadiff chunk
               // economics): report mismatching chunk ids at --chunk-size,
-              // resuming at --start-position
+              // resuming at --start-position. It digests from the cached
+              // per-side layouts validateTable just filled, so each side
+              // is read once
               val badChunks = ValidateJob.validateByDigest(
                 source, target, s, cfg.chunkSize, cfg.startChunk)
               Seq(

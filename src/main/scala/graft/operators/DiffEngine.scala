@@ -1,6 +1,9 @@
 package graft.operators
 
+import org.apache.spark.sql.catalyst.expressions.{EqualNullSafe, XxHash64}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnBridge
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{Column, DataFrame}
 
@@ -10,12 +13,15 @@ import org.apache.spark.sql.{Column, DataFrame}
   * PK-ordered content compare (chunk_size default 1000,
   * dms-cdc-operator-client/src/main.rs:76-77).
   *
-  * Three modes, chosen by data size:
+  * Four operations, chosen by what the caller needs:
   *
+  *  - `rowStatus`: per-PK status (match, mismatch, only_left,
+  *    only_right) from the sides' cached [[rowLayout]]s — pk columns and
+  *    a 16-byte exact payload hash per row are all that is joined, never
+  *    the payload. Counts equal `summarize(rowDiff)` exactly.
   *  - `rowDiff`: full-outer join on the PK with null-safe (`<=>`) payload
-  *    comparison. Exact, row-level, reports WHICH columns mismatch.
-  *    Shuffles both sides once on the PK; with AQE this is a plain
-  *    sort-merge join that scales linearly.
+  *    comparison. Exact, row-level, reports WHICH columns mismatch — the
+  *    per-column drill-down; it ships whole payloads through its shuffle.
   *  - `chunkDigest` + `compareDigests`: pgdatadiff's economics for huge
   *    tables — ship one digest per chunk instead of rows. PK-ordered
   *    chunks reproduce the reference's resumable chunk semantics.
@@ -24,11 +30,17 @@ import org.apache.spark.sql.{Column, DataFrame}
   *    100 TB path: digest = sum of per-row hashes per bucket, fully
   *    map-side aggregatable.
   *
-  * Every value is canonicalized to text before hashing
-  * (`canonicalColumn`) — fixed decimal rendering for floats, fixed
-  * `yyyy-MM-dd HH:mm:ss.SSS` for timestamps, explicit NULL sentinel —
-  * mirroring pgdatadiff's text-level row hashing and making digests
-  * portable across engines.
+  * `rowStatus` and `chunkDigest` read a side through ONE registry-cached
+  * layout, `(pk…, _rh, _xh, _mid)`: a validate that asks for both reads
+  * each side's files once. The two hashes answer different questions:
+  *  - `_rh` is the CANONICAL row hash the digests are made of: every
+  *    value is rendered to text first (`canonicalColumn`) — floats
+  *    rounded to 6 decimals, timestamps as epoch micros, explicit NULL
+  *    sentinel — mirroring pgdatadiff's text-level row hashing and making
+  *    digests portable across engines;
+  *  - `_xh` is the EXACT payload hash row statuses compare: it hashes
+  *    the values themselves, equal exactly when `rowDiff`'s `<=>` is
+  *    (-0.0 = 0.0, NaN = NaN; 1e-9 apart is a mismatch `_rh` would miss).
   */
 object DiffEngine {
 
@@ -87,12 +99,7 @@ object DiffEngine {
     */
   def rowDiff(left: DataFrame, right: DataFrame, pks: Seq[String])
       : DataFrame = {
-    // schema drift is exactly what a validator must catch — a column on
-    // one side only must be an ERROR, not silently excluded
-    require(left.columns.toSet == right.columns.toSet,
-      s"rowDiff requires identical column sets; only-left=" +
-        s"${left.columns.toSet -- right.columns.toSet}, only-right=" +
-        s"${right.columns.toSet -- left.columns.toSet}")
+    requireSameColumns("rowDiff", left, right)
     val payloadCols =
       left.columns.filterNot(pks.contains).toSeq
     val l = left.select(pks.map(col) :+
@@ -116,6 +123,162 @@ object DiffEngine {
       .drop("_l", "_r")
   }
 
+  // schema drift is exactly what a validator must catch — a column on
+  // one side only must be an ERROR, not silently excluded
+  private def requireSameColumns(op: String, left: DataFrame,
+      right: DataFrame): Unit =
+    require(left.columns.toSet == right.columns.toSet,
+      s"$op requires identical column sets; only-left=" +
+        s"${left.columns.toSet -- right.columns.toSet}, only-right=" +
+        s"${right.columns.toSet -- left.columns.toSet}")
+
+  /** Row statuses without the payload: pk columns + diff_status, with the
+    * same rows and statuses as [[rowDiff]] (duplicate and NULL PKs
+    * included — the join is the same full-outer join on the PK), but
+    * joined over the sides' cached [[rowLayout]]s, comparing `_xh`
+    * instead of the payload. A later [[chunkDigest]] of the same side
+    * reads the same cache entry, so the two read each side once.
+    *
+    * Columns whose types differ between the sides are cast to the type
+    * `rowDiff`'s `<=>` compares them at (int vs bigint: bigint), before
+    * hashing; pairs `<=>` cannot compare raise its analysis error. Such a
+    * side's layout is its own cache entry, so its digest reads it again.
+    */
+  def rowStatus(left: DataFrame, right: DataFrame, pks: Seq[String])
+      : DataFrame = {
+    requireSameColumns("rowStatus", left, right)
+    val payloadCols = left.columns.filterNot(pks.contains).toSeq
+    val compared = comparedTypes(left, right, payloadCols)
+    def side(df: DataFrame, as: String) =
+      rowLayout(alignTypes(df, compared), pks)
+        .select(pks.map(col) :+ col("_xh").as(as): _*)
+    // _xh is never NULL, so a NULL one marks the side without the key
+    val status = when(col("_lx").isNull, lit("only_right"))
+      .when(col("_rx").isNull, lit("only_left"))
+      .when(col("_lx") <=> col("_rx"), lit("match"))
+      .otherwise(lit("mismatch"))
+    side(left, "_lx").join(side(right, "_rx"), pks, "full_outer")
+      .select(pks.map(col) :+ status.as(StatusCol): _*)
+  }
+
+  /** The struct type `rowDiff` compares both payload structs at — the
+    * common type Spark's analyzer coerces `<=>`'s operands to. Analysis
+    * only, no job; an incomparable pair throws rowDiff's own error.
+    */
+  private def comparedTypes(left: DataFrame, right: DataFrame,
+      payloadCols: Seq[String]): StructType =
+    left.select(struct(payloadCols.map(col): _*).as("_l"))
+      .crossJoin(right.select(struct(payloadCols.map(col): _*).as("_r")))
+      .select((col("_l") <=> col("_r")).as("_eq"))
+      .queryExecution.analyzed.expressions
+      .flatMap(_.collect { case e: EqualNullSafe => e.left.dataType })
+      .collectFirst { case st: StructType => st }
+      .getOrElse(StructType(Nil))
+
+  /** `df` with each column of `compared` cast to that type where its own
+    * differs — `df` itself (same plan, same cache entry) when none does.
+    */
+  private def alignTypes(df: DataFrame, compared: StructType): DataFrame = {
+    val casts = compared.fields.filter(f => df.schema.find(_.name == f.name)
+      .exists(g => !DataType.equalsStructurally(g.dataType, f.dataType,
+        ignoreNullability = true)))
+      .map(f => f.name -> f.dataType).toMap
+    if (casts.isEmpty) df
+    else df.select(df.columns.toSeq.map(c =>
+      casts.get(c).fold(col(c))(t => col(c).cast(t).as(c))): _*)
+  }
+
+  /** Atoms [[exactHash]] folds for one value. Spark's hash functions skip
+    * NULLs, so (NULL, x) and (x, NULL) would hash alike: every value is
+    * preceded by its null flag and every array by its size, which makes
+    * the atom sequence decodable for a fixed schema. Atoms hash the way
+    * `<=>` compares them: -0.0 like 0.0, every NaN alike.
+    */
+  private def exactAtoms(c: Column, dt: DataType): Seq[Column] =
+    c.isNull +: (dt match {
+      case ArrayType(et, _) =>
+        Seq(size(c), transform(c, e => struct(exactAtoms(e, et): _*)))
+      case st: StructType =>
+        st.fields.toSeq.flatMap(f => exactAtoms(c.getField(f.name), f.dataType))
+      // `<=>` cannot compare maps (rowStatus raises its error first), but
+      // chunkDigest's layout must still build: hash the entries in order
+      case MapType(kt, vt, _) =>
+        exactAtoms(map_entries(c), ArrayType(StructType(Seq(
+          StructField("key", kt), StructField("value", vt)))))
+      case _ => Seq(c)
+    })
+
+  /** Exact 128-bit hash of `cols` in the given order, as 16 bytes: two
+    * xxhash64 folds of the same atoms under different seeds. Unlike
+    * [[rowHash]] nothing is rendered or rounded, so it is equal exactly
+    * when `<=>` is (up to a 2^-128 collision).
+    */
+  private def exactHash(df: DataFrame, cols: Seq[String]): Column = {
+    val atoms = ColumnBridge.expression(lit(cols.size)) +:
+      cols.flatMap(c => exactAtoms(col(c), df.schema(c).dataType))
+        .map(ColumnBridge.expression)
+    ColumnBridge.column(graft.plans.LongPairBytes(
+      XxHash64(atoms, 0x5eed1L), XxHash64(atoms, 0x5eed2L)))
+  }
+
+  /** One side's narrow layout, `(pk…, _rh, _xh, _mid)`, persisted once per
+    * (session, plan, input snapshot) through `CachedPlans.cached`:
+    * range-partitioned on `(pk…, _rh)` and sorted within partitions, with
+    * `_mid` the `monotonically_increasing_id` of the sorted row. Hashes
+    * cover columns in NAME order, so two sides with different physical
+    * column layouts (source parquet vs reducer output) still compare.
+    *
+    * PERSIST is load-bearing for [[chunkDigest]]: its counts pre-job and
+    * final aggregation are two separate executions, and RangePartitioner
+    * re-SAMPLES boundaries per execution (seeded by rdd.id), so without
+    * the cache they would see different layouts and apply the offsets to
+    * the wrong partitions. Registry routing shares one fill between the
+    * callers reading the same side: [[rowStatus]] then [[chunkDigest]] in
+    * a validate, or several digests of one side.
+    *
+    * Staleness contract: the registry key carries the input snapshot
+    * (file listing + length + mtime), so a re-run over rewritten files
+    * misses the stale entry and reads current contents — no manual step.
+    * Only NON-FILE sides (JDBC, in-memory — empty listing, pure plan
+    * keying) need `CachedPlans.clear()` at a mutation boundary; the CLI
+    * keeps one at snapshot→validate because its sides may be JDBC.
+    */
+  private[graft] def rowLayout(df: DataFrame, pks: Seq[String]): DataFrame = {
+    val dataCols = df.columns.sorted.toSeq
+    val narrow = df.select(pks.map(col) ++ Seq(
+      rowHash(df, dataCols).as("_rh"),
+      exactHash(df, dataCols.filterNot(pks.contains)).as("_xh")): _*)
+    val sortCols = pks.map(col) :+ col("_rh")
+    graft.plans.CachedPlans.cached(narrow
+      .repartitionByRange(layoutPartitions(narrow), sortCols: _*)
+      .sortWithinPartitions(sortCols: _*)
+      .withColumn("_mid", monotonically_increasing_id()))
+  }
+
+  /** Range partitions of a layout: one per core, and more only once the
+    * estimated layout outgrows the advisory partition size. Explicit, so
+    * the count does not follow `spark.sql.shuffle.partitions` — adaptive
+    * execution never coalesces a cached plan's output, and 200 tiny
+    * partitions made a small validate about 5× slower. A side whose size is
+    * unknown (a JDBC read reports `spark.sql.defaultSizeInBytes`) gets
+    * one per core. Estimated from the ANALYZED plan, which no cache
+    * substitution changes, so every caller computes the same count and
+    * hits the same registry entry.
+    */
+  private def layoutPartitions(narrow: DataFrame): Int = {
+    val spark = narrow.sparkSession
+    val conf = spark.sessionState.conf
+    val cores = spark.sparkContext.defaultParallelism
+    val plan = narrow.queryExecution.analyzed
+    if (plan.collectLeaves().exists(
+        _.stats.sizeInBytes >= conf.defaultSizeInBytes)) cores
+    else {
+      val advisory = BigInt(conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+      val parts = (plan.stats.sizeInBytes + advisory - 1) / advisory
+      math.max(cores, parts.min(BigInt(Int.MaxValue)).toInt)
+    }
+  }
+
   /** Aggregate a rowDiff into per-status counts (the per-table report the
     * reference logs).
     */
@@ -124,47 +287,20 @@ object DiffEngine {
 
   /** PK-ordered chunk digests (reference-parity mode; resumable compare).
     *
-    * Global row numbers WITHOUT a global sort: range-partition on the PK
-    * (plus the row hash as a deterministic tie-break for duplicate PKs),
-    * sort within partitions, take partition-local indices from
-    * `monotonically_increasing_id`, and lift them to global row numbers
+    * Global row numbers WITHOUT a global sort: the side's [[rowLayout]]
+    * is range-partitioned on the PK (plus the row hash as a deterministic
+    * tie-break for duplicate PKs) and sorted within partitions; partition-
+    * local indices come from its `_mid`, lifted to global row numbers
     * with per-partition count offsets collected in one light pre-job.
-    * The range-partitioned projection is persisted so the pre-job and the
-    * final aggregation read ONE materialized layout (range boundaries are
-    * re-sampled per execution otherwise); the returned DataFrame reads
-    * from that cache — long-lived sessions reclaim it via catalog
-    * `clearCache()`/LRU, same contract as the Dedup pipelines.
+    * Both jobs read the one persisted layout (see [[rowLayout]] for why
+    * that is load-bearing and for the staleness contract); long-lived
+    * sessions reclaim it via `CachedPlans.clear()` or LRU.
     */
   def chunkDigest(df: DataFrame, pks: Seq[String], chunkSize: Int)
       : DataFrame = {
     require(chunkSize > 0, s"chunkDigest: chunkSize must be > 0, got $chunkSize")
-    // hash columns in NAME order so two sides with different physical
-    // column layouts (e.g. source parquet vs reducer output) still
-    // produce comparable digests
-    val dataCols = df.columns.sorted.toSeq
-    // shuffle only pks + 32-char hash, never the full payload
-    val narrow = df.select(pks.map(col) :+ rowHash(df, dataCols).as("_rh"): _*)
-    val sortCols = pks.map(col) :+ col("_rh")
+    val sorted = rowLayout(df, pks)
     val localIdxBits = 33 // monotonically_increasing_id: pid << 33 | local index
-    // PERSIST is load-bearing, not an optimization: the counts pre-job and
-    // the final aggregation are two separate query executions, and
-    // RangePartitioner re-SAMPLES boundaries per execution (seeded by
-    // rdd.id), so without the cache the two jobs see different partition
-    // layouts and the offsets are applied to the wrong partitions.
-    // Reading the materialized cache pins one layout for both. Registry-
-    // routed: several diff queries digest the SAME side (chunk compare +
-    // detail drill-down), and the shared entry serves them one fill.
-    // Staleness contract: the registry key carries the input snapshot
-    // (file listing + length + mtime), so for file-backed sides a re-run
-    // over mutated data automatically misses the stale entry and digests
-    // current contents — no manual step. Only NON-FILE sides (JDBC,
-    // in-memory — empty listing, pure plan keying) need
-    // CachedPlans.clear() at a mutation boundary; the CLI keeps one at
-    // snapshot→validate because its sides may be JDBC.
-    val sorted = graft.plans.CachedPlans.cached(narrow
-      .repartitionByRange(sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-      .withColumn("_mid", monotonically_increasing_id()))
     val pidOf = shiftright(col("_mid"), localIdxBits)
     val counts = sorted.groupBy(pidOf.as("_pid"))
       .agg(count(lit(1)).as("_n"))

@@ -3,8 +3,8 @@ package graft.plans
 import java.security.MessageDigest
 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.types.{BinaryType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Fused portable 60-bit md5 hash: digest the UTF-8 bytes of
@@ -80,4 +80,42 @@ object Md5Long60 {
       ((out(6) & 0xffL) << 8) |
       (out(7) & 0xffL)) >>> 4
   }
+}
+
+/** Two longs as one 16-byte big-endian binary: the exact 128-bit row hash
+  * `DiffEngine` compares, stored and shuffled in 16 bytes (a struct of two
+  * longs costs twice that per row, and casting a long to binary is not
+  * allowed under ANSI).
+  */
+case class LongPairBytes(left: Expression, right: Expression)
+    extends BinaryExpression {
+
+  override def checkInputDataTypes()
+      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
+    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+    if (left.dataType == LongType && right.dataType == LongType)
+      TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires two bigint inputs")
+  }
+
+  override def dataType: DataType = BinaryType
+
+  override def prettyName: String = "long_pair_bytes"
+
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    LongPairBytes.bytes(a.asInstanceOf[Long], b.asInstanceOf[Long])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
+      : ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.LongPairBytes.bytes($a, $b)")
+
+  override protected def withNewChildrenInternal(newLeft: Expression,
+      newRight: Expression): LongPairBytes =
+    copy(left = newLeft, right = newRight)
+}
+
+object LongPairBytes {
+  def bytes(a: Long, b: Long): Array[Byte] =
+    java.nio.ByteBuffer.allocate(16).putLong(a).putLong(b).array()
 }

@@ -2,9 +2,40 @@ package graft
 
 import graft.cdc.{CdcConfig, SnapshotJob, ValidateJob}
 import graft.model.{CdcColumns => C, ListingMode, TableSpec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
+
+/** Files opened by every successful query's scans: one entry per
+  * `filesSize` metric id of a FileSourceScanExec, tagged with the scan's
+  * root paths. Found through cached relations and AQE stages, so a scan
+  * under a cache counts once, when the cache is filled.
+  */
+final class OpenedScans extends QueryExecutionListener {
+  private val seen =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, Long)]()
+  override def onSuccess(funcName: String, qe: QueryExecution,
+      durationNs: Long): Unit = walk(qe.executedPlan)
+  override def onFailure(funcName: String, qe: QueryExecution,
+      exception: Exception): Unit = ()
+  private def walk(p: SparkPlan): Unit = p match {
+    case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+    case q: QueryStageExec => walk(q.plan)
+    case m: InMemoryTableScanExec => walk(m.relation.cacheBuilder.cachedPlan)
+    case f: FileSourceScanExec =>
+      f.metrics.get("filesSize").filter(_.value > 0).foreach { m =>
+        seen.add(f.relation.location.rootPaths.mkString(",") -> m.id)
+      }
+    case other => (other.children ++ other.subqueries).foreach(walk)
+  }
+  /** How many times the files under `dir` were opened. */
+  def opens(dir: String): Int = seen.asScala.count(_._1.contains(dir))
+}
 
 /** The two verbs end-to-end: snapshot (folder → reconstructed parquet
   * state) then validate (source vs reconstruction), incl. the digest
@@ -199,5 +230,92 @@ class CdcJobsSpec extends SparkSpec {
       }
     }
     assert(e.getMessage.contains("boom"))
+  }
+
+  test("validateTable then validateByDigest read each parquet side once") {
+    val base = Files.createTempDirectory("scanonce").toString
+    val (src, tgt) = (s"$base/source", s"$base/target")
+    val rows = (1L to 200L).map(i => (i, s"v$i", i * 0.5))
+    rows.toDF("id", "payload", "amount").coalesce(1).write.parquet(src)
+    rows.map { case (i, p, a) => (i, if (i == 150L) "drift" else p, a) }
+      .toDF("id", "payload", "amount").coalesce(1).write.parquet(tgt)
+    val spec = TableSpec("t", "", Seq("id"))
+    graft.plans.CachedPlans.clear()
+    val scans = new OpenedScans
+    spark.listenerManager.register(scans)
+    try {
+      val source = spark.read.parquet(src)
+      val target = spark.read.parquet(tgt)
+      val rep = ValidateJob.validateTable(source, target, spec)
+      assert(rep.matched === 199L && rep.mismatched === 1L)
+      assert(ValidateJob.validateByDigest(source, target, spec, 50)
+        === Seq(2L))
+      org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+      assert(scans.opens(src) === 1 && scans.opens(tgt) === 1,
+        s"opens: source ${scans.opens(src)}, target ${scans.opens(tgt)}")
+
+      // rewrite the source IN PLACE between the two calls — same file
+      // name, new length and mtime: that side re-keys and is read again,
+      // never served from the stale entry; the target is not re-read
+      val source2 = spark.read.parquet(src)
+      assert(ValidateJob.validateTable(source2, target, spec).mismatched
+        === 1L)
+      val part = new java.io.File(src).listFiles()
+        .find(_.getName.endsWith(".parquet")).get
+      rows.map { case (i, p, a) => (i, if (i == 20L) "rewritten" else p, a) }
+        .toDF("id", "payload", "amount").coalesce(1)
+        .write.parquet(s"$base/staged")
+      val staged = new java.io.File(s"$base/staged").listFiles()
+        .find(_.getName.endsWith(".parquet")).get
+      val mtime = part.lastModified()
+      Files.move(staged.toPath, part.toPath,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      new java.io.File(part.getParent, s".${part.getName}.crc").delete()
+      assert(part.setLastModified(mtime + 10000L))
+      assert(ValidateJob.validateByDigest(spark.read.parquet(src), target,
+        spec, 50) === Seq(0L, 2L))
+      org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+      assert(scans.opens(src) === 2 && scans.opens(tgt) === 1,
+        s"opens: source ${scans.opens(src)}, target ${scans.opens(tgt)}")
+    } finally {
+      spark.listenerManager.unregister(scans)
+      graft.plans.CachedPlans.clear()
+    }
+  }
+
+  test("snapshot counts its rows without reading its output back") {
+    val base = Files.createTempDirectory("snapcount").toString
+    val tdir = s"$base/db/public/items"
+    (1L to 60L).map(i => ("I", "t0", i, Seq("eu", "us")((i % 2).toInt)))
+      .toDF(C.Op, C.IngestTs, "id", "region")
+      .coalesce(1).write.parquet(s"$tdir/_w")
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
+      spark.sparkContext.hadoopConfiguration)
+    val part = fs.listStatus(new org.apache.hadoop.fs.Path(s"$tdir/_w"))
+      .map(_.getPath).find(_.getName.endsWith(".parquet")).get
+    fs.rename(part, new org.apache.hadoop.fs.Path(s"$tdir/LOAD00000001.parquet"))
+    fs.delete(new org.apache.hadoop.fs.Path(s"$tdir/_w"), true)
+    val spec = TableSpec("items", tdir, Seq("id"))
+    val plain = CdcConfig(s"$base/db/public", "public",
+      mode = ListingMode.FullLoadOnly)
+    // the three write layouts: plain parquet, partition dirs, bucketed
+    // saveAsTable
+    Seq("plain" -> plain,
+      "partitioned" -> plain.copy(snapshotPartitionBy = Seq("region")),
+      "bucketed" -> plain.copy(snapshotBuckets = 2)).foreach {
+      case (layout, cfg) =>
+        val out = s"$base/out_$layout"
+        val scans = new OpenedScans
+        spark.listenerManager.register(scans)
+        try {
+          assert(SnapshotJob.run(spark, cfg, Seq(spec), out)
+            === Map("items" -> 60L), layout)
+          org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+          assert(scans.opens(out) === 0, s"$layout output read back")
+        } finally spark.listenerManager.unregister(scans)
+        assert(spark.read.parquet(s"$out/items").count() === 60L, layout)
+    }
+    spark.sql("DROP TABLE IF EXISTS " +
+      SnapshotJob.snapshotTableName("items", s"$base/out_bucketed/items"))
   }
 }

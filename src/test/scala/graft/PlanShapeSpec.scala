@@ -328,10 +328,23 @@ class PlanShapeSpec extends SparkSpec {
         if f.relation.location.rootPaths.exists(
           _.toString.contains(s"$sf/$table")) => f
     }
-    def idxScans(d: DataFrame, component: String) = plan(d).collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec
-        if f.relation.location.rootPaths.exists(
-          _.toString.contains(component)) => f
+    // counted through cached relations and AQE stages, as srcScans is in
+    // the hybrid test: the proximity candidate fill is cached, so its
+    // positions scan sits under an InMemoryTableScan
+    def idxScans(d: DataFrame, component: String) = {
+      def scansIn(p: SparkPlan): Seq[org.apache.spark.sql.execution
+          .FileSourceScanExec] = p.collect {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec
+          if f.relation.location.rootPaths.exists(
+            _.toString.contains(component)) => Seq(f)
+        case m: org.apache.spark.sql.execution.columnar
+          .InMemoryTableScanExec => scansIn(m.relation.cachedPlan)
+        case a: org.apache.spark.sql.execution.adaptive
+          .AdaptiveSparkPlanExec => scansIn(a.executedPlan)
+        case q: org.apache.spark.sql.execution.adaptive
+          .QueryStageExec => scansIn(q.plan)
+      }.flatten
+      scansIn(plan(d))
     }
     // the media probe's decode-once property at the DECLARED surface:
     // documents feeds only the probe-batch payload synthesis — AT MOST
@@ -370,6 +383,8 @@ class PlanShapeSpec extends SparkSpec {
     assert(srcScans(px, "documents").length <= 1,
       "proximity indexed probe must scan documents at most once")
     // same tok-prune guard as the phrase probe (shared memoized collect)
+    assert(idxScans(px, "positions").nonEmpty,
+      "proximity indexed probe shows no positions scan — vacuous guard")
     idxScans(px, "positions").foreach { f =>
       val pushed = f.metadata.getOrElse("PushedFilters", "")
       assert(pushed.contains("In(tok"),
