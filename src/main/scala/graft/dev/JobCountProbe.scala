@@ -12,10 +12,10 @@ import org.apache.spark.sql.SparkSession
   * local wall on the composed capstones is bounded by per-execution
   * fixed costs, job launches first among them, not CPU).
   *
-  * Each query runs `warm` unmeasured executions first (CachedPlans
-  * fills, index fixture builds, broadcast warmups all land there), then
-  * `reps` measured executions — the steady state the bench's min-of-5
-  * reports. Counts are collected via listener; the listener bus is
+  * The protocol is fixed: each query runs 2 unmeasured warm-up
+  * executions first (CachedPlans fills, index fixture builds, broadcast
+  * warmups all land there), then 3 measured executions — the steady
+  * state the bench's min-of-5 reports. Counts are collected via listener; the listener bus is
   * asynchronous, so a short quiesce wait follows every execution.
   *
   * Usage: JobCountProbe <sfDir> <query> [query ...]

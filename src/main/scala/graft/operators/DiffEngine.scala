@@ -280,10 +280,13 @@ object DiffEngine {
   }
 
   /** Aggregate a rowDiff into per-status counts (the per-table report the
-    * reference logs).
+    * reference logs), ordered by status. At most four rows, so they are
+    * sorted in one partition: a global `orderBy` would pay a
+    * range-sampling job and a sort exchange for them.
     */
   def summarize(diff: DataFrame): DataFrame =
-    diff.groupBy(StatusCol).agg(count(lit(1)).as("n")).orderBy(StatusCol)
+    diff.groupBy(StatusCol).agg(count(lit(1)).as("n"))
+      .coalesce(1).sortWithinPartitions(StatusCol)
 
   /** PK-ordered chunk digests (reference-parity mode; resumable compare).
     *

@@ -1,43 +1,56 @@
 package graft.plans
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import scala.collection.mutable
 
-/** Session-scoped registry of persisted intermediates, keyed by the
-  * CANONICALIZED analyzed plan — the same semantic dedup Spark's
-  * CacheManager applies, surfaced so pipelines can share one persisted
-  * branch instead of each calling `persist()` on an identical plan
-  * (which logs "Asked to cache already cached data" and re-runs the
-  * eager fill job per caller).
+/** ONE session-scoped memo registry. Every entry is keyed by
+  * `(SparkSession, key, tag)`, where the key is a CANONICALIZED analyzed
+  * plan (the same semantic dedup Spark's CacheManager applies) or an
+  * index directory, and carries the SNAPSHOT FINGERPRINT of that key's
+  * inputs. Four uses share it, through thin wrappers over one lookup:
+  *   - [[cached]]: persisted plans. Pipelines that derive the same
+  *     shingle/edge tables in several declared queries (minhash,
+  *     components, decontaminate) share one persisted branch instead of
+  *     each calling `persist()` on an identical plan (which logs "Asked
+  *     to cache already cached data" and re-runs the eager fill job per
+  *     caller). `persist()` + the eager fill `count()` run ONCE per
+  *     distinct plan per session (the count is load-bearing: concurrent
+  *     lazy branch materialization would race and recompute the
+  *     upstream pipeline), and repeated query construction (benchmark
+  *     reps, verify reruns) reuses the warm cache with zero extra jobs.
+  *   - [[memo]]: iterative results (connected components, BPE vocab,
+  *     recall gates) memoized on their INPUT plan + an operator tag,
+  *     since checkpoints make their output plan unique per run.
+  *   - [[memoValue]]: bounded driver-side values collected from a plan
+  *     (the indexed probes' query-token In-lists).
+  *   - [[loadIndex]]: loaded on-disk indexes, keyed by directory.
   *
-  * The dedup/similarity pipelines derive the same shingle/edge tables in
-  * several declared queries (minhash, components, decontaminate); routing
-  * every branch-shared persist through [[cached]] means:
-  *   - `persist()` + the eager fill `count()` run ONCE per distinct plan
-  *     per session (the count is load-bearing: concurrent lazy branch
-  *     materialization would race and recompute the upstream pipeline);
-  *   - repeated query construction (benchmark reps, verify reruns) reuses
-  *     the already-warm cache with zero extra jobs.
+  * Staleness guard: a lookup whose fingerprint differs from the entry's
+  * REPLACES that entry, so each (session, key, tag) holds one live
+  * snapshot. For plans the fingerprint is the digest of the plan's
+  * input-file listing, each file tagged with its length and
+  * modification time ([[snapshot]]): two reads of the same path
+  * canonicalize to the same plan even when the files underneath were
+  * rewritten in between, and fingerprinting the listing makes the
+  * post-rewrite build MISS the stale entry and rebuild from current
+  * data, while unchanged re-reads still hit. Including length+mtime
+  * covers SAME-NAME in-place rewrites too (Spark's own writers use fresh
+  * UUID part names, but the streaming state sink's `bucket_<k>` swap
+  * keeps names stable). Non-file sources (JDBC, in-memory) have an empty
+  * listing and fall back to pure plan keying. For index directories the
+  * fingerprint is the recursive walk of [[dirDigest]]. Cost: one
+  * `listStatus` per distinct input directory (plans) or per directory
+  * of the index tree (indexes) per lookup.
   *
-  * Staleness guard: the key also carries a SNAPSHOT FINGERPRINT — the
-  * digest of the plan's input-file listing, each file tagged with its
-  * length and modification time. Two reads of the same path canonicalize
-  * to the same plan even when the files underneath were rewritten in
-  * between; fingerprinting the listing makes the post-rewrite build MISS
-  * the stale entry and rebuild from current data, while unchanged
-  * re-reads still hit. Including length+mtime covers SAME-NAME in-place
-  * rewrites too (Spark's own writers use fresh UUID part names, but the
-  * streaming state sink's `bucket_<k>` swap keeps names stable). Non-file
-  * sources (JDBC, in-memory) have an empty listing and fall back to pure
-  * plan keying. Cost: one `listStatus` per distinct input directory per
-  * key computation.
-  *
-  * Lifetime contract: entries live until [[clear]] (which unpersists
-  * registry persists AND releases checkpoint blocks backing memoized
-  * results) or session end. Entries are tiny (a plan reference + a
-  * DataFrame); the cached BLOCKS are governed by Spark's MEMORY_AND_DISK
+  * Lifetime: entries live until [[clear]] or session end; the session is
+  * in every key, so a new session never sees another's entries. Release
+  * rule: an entry that leaves the registry (replaced on a snapshot miss,
+  * or dropped by [[clear]]) has the `release` its wrapper registered
+  * applied to its completed value. Persisted plans and memos unpersist
+  * their storage, checkpoint blocks included; values and index handles
+  * hold no storage and release nothing. Entries are tiny (a key plus a
+  * reference); the cached BLOCKS are governed by Spark's MEMORY_AND_DISK
   * storage with LRU eviction.
   */
 object CachedPlans {
@@ -89,18 +102,6 @@ object CachedPlans {
     }
   }
 
-  /** MD5 of the sorted input-file listing PLUS each file's length and
-    * modification time — the plan's data snapshot identity. Empty string
-    * for non-file-backed plans.
-    *
-    * Name alone is not enough: an in-place rewrite that keeps file names
-    * (the streaming state sink's `bucket_<k>` swap, any overwrite with
-    * stable names) would leave a name-only digest unchanged and serve
-    * stale results. Length+mtime comes from one `listStatus` per distinct
-    * parent directory (not one RPC per file); a file deleted between
-    * listing and stat simply digests as absent, which still changes the
-    * key.
-    */
   /** [[snapshot]] for external cache keys: callers that memoize
     * derived artifacts of a file-backed plan (e.g. QueryIndexes' on-disk
     * corpus indexes) fold this into THEIR keys so a regenerated source
@@ -132,6 +133,18 @@ object CachedPlans {
     (fromAnalyzed ++ df.inputFiles).distinct
   }
 
+  /** MD5 of the sorted input-file listing PLUS each file's length and
+    * modification time — the plan's data snapshot identity. Empty string
+    * for non-file-backed plans.
+    *
+    * Name alone is not enough: an in-place rewrite that keeps file names
+    * (the streaming state sink's `bucket_<k>` swap, any overwrite with
+    * stable names) would leave a name-only digest unchanged and serve
+    * stale results. Length+mtime comes from one `listStatus` per distinct
+    * parent directory (not one RPC per file); a file deleted between
+    * listing and stat simply digests as absent, which still changes the
+    * key.
+    */
   private def snapshot(df: DataFrame): String = {
     val files = inputFileList(df)
     if (files.isEmpty) ""
@@ -162,15 +175,42 @@ object CachedPlans {
     }
   }
 
+  /** MD5 of an index directory TREE: every entry's path, length and
+    * modification time, walked recursively — the fingerprint of
+    * [[loadIndex]]. A lifecycle verb that mutates the index (a staged
+    * commit renames files in, a compaction rewrites them) changes it, so
+    * the next load re-keys instead of serving stale plans.
+    */
+  private def dirDigest(spark: SparkSession, dir: String): String = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(conf)
+    val md = java.security.MessageDigest.getInstance("MD5")
+    def walk(p: org.apache.hadoop.fs.Path): Unit =
+      fs.listStatus(p).sortBy(_.getPath.toString).foreach { st =>
+        md.update((s"${st.getPath.toUri.getPath}\u0000${st.getLen}:" +
+          s"${st.getModificationTime}\u0000")
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        if (st.isDirectory) walk(st.getPath)
+      }
+    walk(root)
+    java.util.Base64.getEncoder.encodeToString(md.digest())
+  }
+
+  /** One registry entry: the fingerprint it was built under, its fill
+    * holder, and the release its wrapper registered for it.
+    */
+  private final case class Entry(snap: String, holder: Lazy[AnyRef],
+      release: AnyRef => Unit)
+
   // key includes the session: identical plans from different sessions
-  // must not share a DataFrame (its execution is bound to its session).
-  // ONE live snapshot per (session, plan): a snapshot miss REPLACES the
-  // entry (the stale twin must go anyway — see [[cached]]), which keeps
-  // the lookup O(1) instead of scanning every registered plan for
-  // structural equality under the global lock.
-  private val entries = mutable.Map.empty[
-    (org.apache.spark.sql.SparkSession, LogicalPlan),
-    (String, Lazy[DataFrame])]
+  // must not share a result (a DataFrame's execution is bound to its
+  // session). ONE live snapshot per (session, key, tag): a snapshot miss
+  // REPLACES the entry (the stale twin must go anyway — see [[lookup]]),
+  // which keeps the lookup O(1) instead of scanning every registered
+  // plan for structural equality under the global lock.
+  private val registry =
+    mutable.Map.empty[(SparkSession, AnyRef, String), Entry]
 
   /** Release a displaced holder whose fill is (or may be) still IN
     * FLIGHT — called from INSIDE the replacement holder's fill thunk
@@ -192,36 +232,36 @@ object CachedPlans {
     * persist until [[clear]], which only a pathological interleaving
     * (forcing a holder it was handed before the displacement) reaches.
     */
-  private def releaseHolder(h: Lazy[DataFrame]): Unit =
+  private def releaseHolder(h: Lazy[AnyRef],
+      release: AnyRef => Unit): Unit =
     try h.settle().foreach(release)
     catch {
       case _: InterruptedException => Thread.currentThread().interrupt()
       case scala.util.control.NonFatal(_) => ()
     }
 
-  /** Persist-and-eagerly-fill `df` once per (session, canonical plan,
-    * input snapshot); later calls with a semantically identical plan
-    * over the SAME files return the SAME cached DataFrame without
-    * touching the CacheManager again.
+  /** The one lookup every wrapper goes through: return the value built
+    * for `(session, key, tag)` under fingerprint `snap`, building it
+    * (outside the registry lock, see [[Lazy]]) on a miss.
     *
-    * A snapshot MISS against an existing same-plan entry also EVICTS
-    * that entry (unpersist + forget): Spark's CacheManager substitutes
-    * cached data into any execution whose canonical plan matches —
-    * file listing NOT consulted — so a stale twin left persisted would
-    * serve its pre-rewrite blocks to the rebuilt frame's execution and
-    * the rebuild would silently recompute nothing (bitten in practice
-    * by the dedup indexes' FS-rename staged commits, which — unlike
-    * Spark writers — never call recacheByPath).
+    * A snapshot MISS against an existing entry also EVICTS that entry,
+    * through the `release` it was registered with. For persisted plans
+    * this is load-bearing: Spark's CacheManager substitutes cached data
+    * into any execution whose canonical plan matches — file listing NOT
+    * consulted — so a stale twin left persisted would serve its
+    * pre-rewrite blocks to the rebuilt frame's execution and the rebuild
+    * would silently recompute nothing (bitten in practice by the dedup
+    * indexes' FS-rename staged commits, which — unlike Spark writers —
+    * never call recacheByPath).
     */
-  def cached(df: DataFrame): DataFrame = {
-    val plan = df.queryExecution.analyzed.canonicalized
-    val snap = snapshot(df)
-    val key = (df.sparkSession, plan)
+  private def lookup[T <: AnyRef](session: SparkSession, key: AnyRef,
+      tag: String, snap: String, release: T => Unit)(build: => T): T = {
+    val k = (session, key, tag)
     val holder = synchronized {
-      entries.get(key) match {
-        case Some((s, h)) if s == snap => h
+      registry.get(k) match {
+        case Some(e) if e.snap == snap => e.holder
         case prior =>
-          // a COMPLETED stale twin unpersists here, inside the lock:
+          // a COMPLETED stale twin is released here, inside the lock:
           // its CacheManager entry must be gone before any caller can
           // force the replacement's persist (which would plan-match
           // the stale blocks). An IN-FLIGHT twin is instead released
@@ -230,102 +270,78 @@ object CachedPlans {
           // releasing after the insert (outside the thunk) would let a
           // concurrent same-key caller force the replacement's persist
           // while the stale blocks are still registered.
-          val pending = prior.map(_._2).filter { h =>
-            h.peek match {
-              case Some(d) => release(d); false
+          val pending = prior.filter { e =>
+            e.holder.peek match {
+              case Some(v) => e.release(v); false
               case None => true
             }
           }
-          val h = new Lazy[DataFrame](() => {
-            pending.foreach(releaseHolder)
-            df.persist()
-            df.count() // eager: populate ONCE before branches fan out
-            df
+          val h = new Lazy[AnyRef](() => {
+            pending.foreach(e => releaseHolder(e.holder, e.release))
+            build
           })
-          entries(key) = (snap, h)
-          h
-      }
-    }
-    holder.value
-  }
-
-  // iterative operators (connected components) materialize checkpoints,
-  // so their OUTPUT plan is unique per run and [[cached]] can never
-  // dedup them; memoizing on the INPUT plan + an operator tag shares one
-  // run across queries deriving the same upstream. Same one-snapshot
-  // shape as [[entries]] so a rewritten input evicts its stale memo
-  // (checkpoint blocks included) instead of orphaning it until clear().
-  private val memos = mutable.Map.empty[
-    (org.apache.spark.sql.SparkSession, LogicalPlan, String),
-    (String, Lazy[DataFrame])]
-
-  /** Memoize `build` once per (session, canonical plan of `key`, input
-    * snapshot of `key`, `tag`). Same lifetime contract as [[cached]]:
-    * entries live until [[clear]] or session end; a rewrite of the
-    * underlying files changes the snapshot, EVICTS the stale build's
-    * storage, and triggers a fresh build. The build runs outside the
-    * registry lock (see [[Lazy]]).
-    */
-  def memo(tag: String, key: DataFrame)(build: => DataFrame): DataFrame = {
-    val plan = key.queryExecution.analyzed.canonicalized
-    val snap = snapshot(key)
-    val mkey = (key.sparkSession, plan, tag)
-    val holder = synchronized {
-      memos.get(mkey) match {
-        case Some((s, h)) if s == snap => h
-        case prior =>
-          // same completed-inside-the-lock / in-flight-inside-the-thunk
-          // split as [[cached]]
-          val pending = prior.map(_._2).filter { h =>
-            h.peek match {
-              case Some(d) => release(d); false
-              case None => true
-            }
-          }
-          val h = new Lazy[DataFrame](() =>
-            { pending.foreach(releaseHolder); build })
-          memos(mkey) = (snap, h)
-          h
-      }
-    }
-    holder.value
-  }
-
-  // driver-side VALUE memos (bounded collected artifacts — the indexed
-  // probes' query-token In-lists), keyed like [[memo]]. Without this,
-  // every EXECUTION of a probe that prunes a stored component to its
-  // query vocabulary re-pays a driver collect (a whole Spark job of
-  // fixed overhead): measured +22% on retrieval_hybrid_rrf_phrase and
-  // +17% on retrieval_e2e in the r20 driver bench. Nothing is persisted
-  // behind a value, so snapshot-miss eviction is plain replacement.
-  private val valMemos = mutable.Map.empty[
-    (org.apache.spark.sql.SparkSession, LogicalPlan, String),
-    (String, Lazy[AnyRef])]
-
-  /** Memoize a driver-side value derived from a (file-backed) plan,
-    * once per (session, canonical plan of `key`, input snapshot of
-    * `key`, `tag`). Same staleness contract as [[memo]]: a rewrite of
-    * the files under `key` changes the snapshot and rebuilds; same
-    * concurrency contract: same-key callers share one in-flight build,
-    * different keys build in parallel. Entries die with [[clear]] or
-    * the session — never across processes.
-    */
-  def memoValue[T <: AnyRef](tag: String, key: DataFrame)
-      (build: => T): T = {
-    val plan = key.queryExecution.analyzed.canonicalized
-    val snap = snapshot(key)
-    val mkey = (key.sparkSession, plan, tag)
-    val holder = synchronized {
-      valMemos.get(mkey) match {
-        case Some((s, h)) if s == snap => h
-        case _ =>
-          val h = new Lazy[AnyRef](() => build)
-          valMemos(mkey) = (snap, h)
+          registry(k) = Entry(snap, h, release.asInstanceOf[AnyRef => Unit])
           h
       }
     }
     holder.value.asInstanceOf[T]
   }
+
+  private val noRelease: AnyRef => Unit = _ => ()
+
+  /** Persist-and-eagerly-fill `df` once per (session, canonical plan,
+    * input snapshot): the memo of `df` itself. Later calls with a
+    * semantically identical plan over the SAME files return the SAME
+    * cached DataFrame without touching the CacheManager again; a
+    * rewrite of the files unpersists the stale twin and rebuilds.
+    */
+  def cached(df: DataFrame): DataFrame =
+    lookup[DataFrame](df.sparkSession, df.queryExecution.analyzed
+      .canonicalized, "cached", snapshot(df), release) {
+      df.persist()
+      df.count() // eager: populate ONCE before branches fan out
+      df
+    }
+
+  /** Memoize `build` once per (session, canonical plan of `key`, input
+    * snapshot of `key`, `tag`). Iterative operators (connected
+    * components) materialize checkpoints, so their OUTPUT plan is unique
+    * per run and [[cached]] can never dedup them; memoizing on the INPUT
+    * plan shares one run across queries deriving the same upstream. A
+    * rewrite of the underlying files EVICTS the stale build's storage
+    * (checkpoint blocks included) and triggers a fresh build.
+    */
+  def memo(tag: String, key: DataFrame)(build: => DataFrame): DataFrame =
+    lookup[DataFrame](key.sparkSession, key.queryExecution.analyzed
+      .canonicalized, s"memo|$tag", snapshot(key), release)(build)
+
+  /** Memoize a driver-side value derived from a (file-backed) plan,
+    * once per (session, canonical plan of `key`, input snapshot of
+    * `key`, `tag`). Without this, every EXECUTION of a probe that prunes
+    * a stored component to its query vocabulary re-pays a driver collect
+    * (a whole Spark job of fixed overhead): measured +22% on
+    * retrieval_hybrid_rrf_phrase and +17% on retrieval_e2e in the r20
+    * driver bench. Nothing is persisted behind a value, so it releases
+    * nothing.
+    */
+  def memoValue[T <: AnyRef](tag: String, key: DataFrame)
+      (build: => T): T =
+    lookup[T](key.sparkSession, key.queryExecution.analyzed.canonicalized,
+      s"value|$tag", snapshot(key), noRelease)(build)
+
+  /** Load the index under `dir` once per (session, directory tree
+    * state). Every `DedupIndex.load*` pays driver-side Spark actions
+    * whose values are pure functions of the index FILES (loadLexical
+    * runs a stats aggregate, loadVectors collects ranges, PQ codebooks
+    * and centroids), and the declared `*_indexed` queries re-load on
+    * every construction. The fingerprint is [[dirDigest]], so a verb
+    * that mutates the index re-keys the load and drops the superseded
+    * handle. A handle's DataFrames read the files, never a persist, so
+    * it releases nothing.
+    */
+  def loadIndex[T <: AnyRef](spark: SparkSession, dir: String)
+      (load: => T): T =
+    lookup[T](spark, dir, "index", dirDigest(spark, dir), noRelease)(load)
 
   /** Release the storage behind a built result: the registry persist
     * (if any) and any checkpoint blocks its plan reads from —
@@ -344,14 +360,11 @@ object CachedPlans {
     }
   }
 
-  /** Unpersist every registered intermediate (including checkpoint
-    * blocks backing memoized iterative results) and forget it.
+  /** Release and forget every entry: registry persists, checkpoint
+    * blocks backing memoized results, driver values and index loads.
     */
   def clear(): Unit = synchronized {
-    entries.values.foreach(_._2.peek.foreach(release))
-    memos.values.foreach(_._2.peek.foreach(release))
-    entries.clear()
-    memos.clear()
-    valMemos.clear()
+    registry.values.foreach(e => e.holder.peek.foreach(e.release))
+    registry.clear()
   }
 }

@@ -1,7 +1,8 @@
 package graft.queries
 
 import graft.operators.DedupIndex
-import org.apache.spark.sql.SparkSession
+import graft.plans.CachedPlans
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import Tables._
@@ -23,6 +24,14 @@ import Tables._
   * one, and a leftover index from a previous process is reused only when
   * it still matches the bytes on disk (plus the geometry pinned in its
   * `_params.json`).
+  *
+  * Two memos with two lifetimes: [[built]] records the on-disk BUILDS
+  * for the whole process (a built directory outlives any session), and
+  * the [[graft.plans.CachedPlans]] registry holds the LOADS for one
+  * session ([[graft.plans.CachedPlans.loadIndex]], re-keyed when a verb
+  * changes the directory tree, dropped by `CachedPlans.clear()`).
+  * Streaming sinks keep their per-trigger `DedupIndex.load*` reloads —
+  * their index mutates every commit, so a memo would only add the walk.
   */
 object QueryIndexes {
 
@@ -34,58 +43,6 @@ object QueryIndexes {
   private val built =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean](
       256)
-
-  // loaded-index memo: one DedupIndex.load* per (dir, on-disk state)
-  // per session. Every load call pays driver-side Spark actions whose
-  // values are pure functions of the index FILES — loadLexical runs a
-  // stats aggregate .head(), loadVectors collects ranges + PQ codebooks
-  // + centroids — and the declared *_indexed queries re-load on every
-  // construction, so each bench rep of every indexed probe paid 1-3
-  // fixed jobs before touching its own work (the r20 verdict's
-  // c8-beats-c32 diagnosis). The digest keys on the directory tree's
-  // (path, length, mtime), so a lifecycle verb mutating the index
-  // re-keys the load instead of serving stale plans; fixture dirs are
-  // quiescent after their computeIfAbsent build, which is what makes
-  // the memo hit for the rest of the session. Streaming sinks keep
-  // their per-trigger DedupIndex.load* reloads — their index mutates
-  // every commit, so a memo would only add the walk.
-  private val loaded =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), AnyRef](
-      256)
-
-  private def dirDigest(spark: SparkSession, dir: String): String = {
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(conf)
-    val md = java.security.MessageDigest.getInstance("MD5")
-    def walk(p: org.apache.hadoop.fs.Path): Unit =
-      fs.listStatus(p).sortBy(_.getPath.toString).foreach { st =>
-        md.update((s"${st.getPath.toUri.getPath}\u0000${st.getLen}:" +
-          s"${st.getModificationTime}\u0000")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        if (st.isDirectory) walk(st.getPath)
-      }
-    walk(root)
-    java.util.Base64.getEncoder.encodeToString(md.digest())
-  }
-
-  private def memoLoad[T <: AnyRef](spark: SparkSession, dir: String)
-      (load: => T): T =
-    loaded.computeIfAbsent((dir, dirDigest(spark, dir)), _ => load)
-      .asInstanceOf[T]
-
-  private def loadTextMemo(spark: SparkSession,
-      dir: String): DedupIndex.TextIndex =
-    memoLoad(spark, dir)(DedupIndex.loadText(spark, dir))
-  private def loadLexicalMemo(spark: SparkSession,
-      dir: String): DedupIndex.LexicalIndex =
-    memoLoad(spark, dir)(DedupIndex.loadLexical(spark, dir))
-  private def loadMediaMemo(spark: SparkSession,
-      dir: String): DedupIndex.MediaIndex =
-    memoLoad(spark, dir)(DedupIndex.loadMedia(spark, dir))
-  private def loadVectorsMemo(spark: SparkSession,
-      dir: String): DedupIndex.VectorIndex =
-    memoLoad(spark, dir)(DedupIndex.loadVectors(spark, dir))
 
   private def dirFor(sfDir: String, kind: String, fingerprint: String)
       : String = {
@@ -102,9 +59,7 @@ object QueryIndexes {
     * starts from the SAME base build; cloning charges that cold build
     * once per family instead of once per variant — each variant's
     * timed surface (its verbs + its probe) is unchanged, it just runs
-    * against a copy instead of a redundant rebuild. Bases are ensured
-    * BEFORE the variant's `built.computeIfAbsent` (nested computes on
-    * one ConcurrentHashMap risk the recursive-update trap).
+    * against a copy instead of a redundant rebuild.
     */
   private def cloneIndex(spark: SparkSession, from: String,
       to: String): Unit = {
@@ -123,316 +78,207 @@ object QueryIndexes {
       }
   }
 
-  // base-dir getters: ensure the family's base index is built, return
-  // its directory (the clone source for that family's variants)
-  private def textBaseDir(spark: SparkSession, sfDir: String): String = {
-    text(spark, sfDir)
-    dirFor(sfDir, "text", graft.plans.CachedPlans.dataFingerprint(
-      tbl(spark, sfDir, "documents")))
+  /** One index kind: the table its fixtures are keyed on, its loader,
+    * and the fixture geometry a leftover on-disk index must carry to be
+    * reused — the ONE place each kind's reuse contract lives.
+    */
+  private final class Family[I <: AnyRef](val table: String,
+      loadRaw: (SparkSession, String) => I, geometry: I => Boolean) {
+    def load(spark: SparkSession, dir: String): I =
+      CachedPlans.loadIndex(spark, dir)(loadRaw(spark, dir))
+    def reusable(spark: SparkSession, dir: String): Boolean =
+      try geometry(loadRaw(spark, dir))
+      catch {
+        case _: IllegalArgumentException | _: IllegalStateException => false
+      }
   }
-  private def lexicalBaseDir(spark: SparkSession, sfDir: String): String = {
-    lexical(spark, sfDir)
-    dirFor(sfDir, "lexical", graft.plans.CachedPlans.dataFingerprint(
-      tbl(spark, sfDir, "documents")))
+
+  // shingleN=3, 12 hashes, 4 bands, portable md5 — `dedup_incremental*`
+  private val TextFamily = new Family[DedupIndex.TextIndex]("documents",
+    DedupIndex.loadText(_, _), { i =>
+      val p = i.params
+      p.shingleN == 3 && p.numHashes == 12 && p.bands == 4 && p.portable
+    })
+  private val LexicalFamily = new Family[DedupIndex.LexicalIndex](
+    "documents", DedupIndex.loadLexical(_, _), _.params.termNgram == 2)
+  // 4 × 16-bit bands under the coder pinned in the params — the
+  // `mm_*_incremental*` contract
+  private def mediaFamily(coder: String) =
+    new Family[DedupIndex.MediaIndex]("documents",
+      DedupIndex.loadMedia(_, _),
+      i => i.params.bands == 4 && i.params.coder == coder)
+  // planes 2, dim 64, 20 centroids, PQ 8x16 — every vector fixture
+  private val VectorFamily = new Family[DedupIndex.VectorIndex](
+    "embeddings", DedupIndex.loadVectors(_, _), { i =>
+      val p = i.params
+      p.planes == 2 && p.dim == 64 && p.centroids == 20 &&
+        p.pqM == 8 && p.pqKsub == 16
+    })
+
+  // every fixture, in declaration order (bases before their variants);
+  // [[prewarmFixtures]] is derived from it
+  private val fixtures =
+    scala.collection.mutable.ArrayBuffer.empty[Fixture[_ <: AnyRef]]
+
+  /** One build-once fixture: its directory `kind`, its family, the
+    * tables its directory is keyed on, the frame its build reads, how a
+    * directory without a reusable index starts (written from that frame,
+    * or cloned from the `base` fixture's directory), and the `verbs`
+    * replayed on every build. Verbs re-run even when the on-disk index
+    * is reused: each is idempotent by contract (replayed absorbs and
+    * delete batches commit nothing, compaction of nothing tombstoned is
+    * a no-op), so the replay path is exercised by the gate itself.
+    */
+  private final class Fixture[I <: AnyRef](val kind: String,
+      val family: Family[I], base: Option[Fixture[I]],
+      keyTables: Seq[String], source: (SparkSession, String) => DataFrame,
+      write: (DataFrame, String) => Unit,
+      verbs: (DataFrame, String) => Unit) {
+    fixtures += this
+
+    def isBase: Boolean = base.isEmpty
+
+    /** Build this fixture once per process; return its directory. */
+    def ensure(spark: SparkSession, sfDir: String): String = {
+      val dir = dirFor(sfDir, kind, keyTables
+        .map(t => CachedPlans.dataFingerprint(tbl(spark, sfDir, t)))
+        .mkString("\u0000"))
+      // the base is ensured BEFORE this fixture's compute: nested
+      // computes on one ConcurrentHashMap risk the recursive-update trap
+      val from = base.map(_.ensure(spark, sfDir))
+      built.computeIfAbsent(dir, _ => {
+        val src = source(spark, sfDir)
+        if (!family.reusable(spark, dir)) from match {
+          case Some(b) => cloneIndex(spark, b, dir)
+          case None => write(src, dir)
+        }
+        verbs(src, dir)
+        java.lang.Boolean.TRUE
+      })
+      dir
+    }
+
+    def apply(spark: SparkSession, sfDir: String): I =
+      family.load(spark, ensure(spark, sfDir))
   }
-  private def mediaBaseDir(spark: SparkSession, sfDir: String): String = {
-    media(spark, sfDir)
-    dirFor(sfDir, "media", graft.plans.CachedPlans.dataFingerprint(
-      tbl(spark, sfDir, "documents")))
+
+  /** A family base: written from its table when no reusable index is on
+    * disk.
+    */
+  private def written[I <: AnyRef](kind: String, family: Family[I])
+      (write: (DataFrame, String) => Unit): Fixture[I] =
+    new Fixture(kind, family, None, Seq(family.table),
+      tbl(_, _, family.table), write, (_, _) => ())
+
+  /** A lifecycle variant: a clone of `base` taken through `verbs`. */
+  private def variant[I <: AnyRef](kind: String, base: Fixture[I])
+      (verbs: (DataFrame, String) => Unit): Fixture[I] =
+    new Fixture(kind, base.family, Some(base), Seq(base.family.table),
+      tbl(_, _, base.family.table), (_, _) => (), verbs)
+
+  /** The SQL literal the refreshed queries append to updated docs — must
+    * match [[refreshedDocsSql]] exactly.
+    */
+  val RefreshSuffix = " refreshed edition two"
+
+  /** A CDC UPDATE batch's rows: the `updated` slice with CHANGED text,
+    * every other row unchanged.
+    */
+  private def refreshedText(updated: org.apache.spark.sql.Column) =
+    when(updated, concat(col("text"), lit(RefreshSuffix)))
+      .otherwise(col("text")).as("text")
+
+  // ------------------------------------------------------------- text
+
+  private val textFx = written("text", TextFamily) { (docs, dir) =>
+    DedupIndex.writeText(docs.filter(col("doc_id") % 2 === 0),
+      "doc_id", "text", dir)
   }
-  private def mediaAudioBaseDir(spark: SparkSession,
-      sfDir: String): String = {
-    mediaAudio(spark, sfDir)
-    dirFor(sfDir, "media_audio", graft.plans.CachedPlans.dataFingerprint(
-      tbl(spark, sfDir, "documents")))
+  // the even `% 10` slice: the text and vector families' CDC DELETE batch
+  private def evenTenth(df: DataFrame, id: String) =
+    df.filter(col(id) % 2 === 0 && col(id) % 10 === 0).select(col(id))
+  private def retireTextTenth(docs: DataFrame, dir: String): Unit =
+    DedupIndex.retireText(evenTenth(docs, "doc_id"), "doc_id", dir)
+  private val textAbsorbedFx = variant("text_absorbed", textFx) {
+    (docs, dir) => DedupIndex.appendText(
+      docs.filter(col("doc_id") % 4 === 1), "doc_id", "text", dir)
   }
-  private def mediaVideoBaseDir(spark: SparkSession,
-      sfDir: String): String = {
-    mediaVideo(spark, sfDir)
-    dirFor(sfDir, "media_video", graft.plans.CachedPlans.dataFingerprint(
-      tbl(spark, sfDir, "documents")))
+  private val textRetiredFx =
+    variant("text_retired", textFx)(retireTextTenth)
+  private val textRefreshedFx = variant("text_refreshed", textFx) {
+    (docs, dir) => DedupIndex.appendText(
+      docs.filter(col("doc_id") % 2 === 0 &&
+          (col("doc_id") % 10 === 0 || col("doc_id") % 6 === 0))
+        .select(col("doc_id"), refreshedText(col("doc_id") % 10 === 0)),
+      "doc_id", "text", dir)
   }
-  private def vectorsBaseDir(spark: SparkSession, sfDir: String): String = {
-    vectors(spark, sfDir)
-    dirFor(sfDir, "vectors", graft.plans.CachedPlans.dataFingerprint(
-      tbl(spark, sfDir, "embeddings")))
+  private val textResurrectedFx = variant("text_resurrected", textFx) {
+    (docs, dir) =>
+      retireTextTenth(docs, dir)
+      DedupIndex.appendText(docs.filter(col("doc_id") % 20 === 0),
+        "doc_id", "text", dir)
+  }
+  private val textCompactedFx = variant("text_compacted", textFx) {
+    (docs, dir) =>
+      retireTextTenth(docs, dir)
+      DedupIndex.compactText(docs.sparkSession, dir)
   }
 
   /** Text-dedup index over even-doc_id documents (shingleN=3, 12 hashes,
     * 4 bands, portable md5 — the exact geometry of `dedup_incremental*`).
     */
-  def text(spark: SparkSession, sfDir: String): DedupIndex.TextIndex = {
-    val docs = tbl(spark, sfDir, "documents")
-    val dir = dirFor(sfDir, "text",
-      graft.plans.CachedPlans.dataFingerprint(docs))
-    built.computeIfAbsent(dir, _ => {
-      val reusable =
-        try {
-          val p = DedupIndex.loadText(spark, dir).params
-          p.shingleN == 3 && p.numHashes == 12 && p.bands == 4 && p.portable
-        } catch {
-          case _: IllegalArgumentException | _: IllegalStateException =>
-            false
-        }
-      if (!reusable)
-        DedupIndex.writeText(docs.filter(col("doc_id") % 2 === 0),
-          "doc_id", "text", dir)
-      java.lang.Boolean.TRUE
-    })
-    loadTextMemo(spark, dir)
-  }
-
-  /** BM25 lexical index over the FULL documents table (bigram terms —
-    * the exact geometry of `text_bm25_topk`, whose query slice probes
-    * the same corpus it is drawn from).
-    */
-  def lexical(spark: SparkSession,
-      sfDir: String): DedupIndex.LexicalIndex = {
-    val docs = tbl(spark, sfDir, "documents")
-    val dir = dirFor(sfDir, "lexical",
-      graft.plans.CachedPlans.dataFingerprint(docs))
-    built.computeIfAbsent(dir, _ => {
-      val reusable =
-        try DedupIndex.loadLexical(spark, dir).params.termNgram == 2
-        catch {
-          case _: IllegalArgumentException | _: IllegalStateException =>
-            false
-        }
-      if (!reusable)
-        DedupIndex.writeLexical(docs, "doc_id", "text", dir, termNgram = 2)
-      java.lang.Boolean.TRUE
-    })
-    loadLexicalMemo(spark, dir)
-  }
-
-  /** Lexical index over the full documents table then fed a CDC DELETE
-    * batch: the `doc_id % 10 == 0` slice retires through
-    * [[DedupIndex.retireLexical]]'s staged commit — tombstones arm AND
-    * the retired docs' df/length/corpus-stats contributions reverse in
-    * the same commit, so probes score the surviving corpus exactly
-    * (stale-postings drift is the judge-flagged gap this closes). The
-    * retire re-runs on reuse: replayed delete batches find no live
-    * generation and commit nothing, so the replay path is exercised by
-    * the gate itself.
-    */
-  def lexicalRetired(spark: SparkSession,
-      sfDir: String): DedupIndex.LexicalIndex = {
-    val docs = tbl(spark, sfDir, "documents")
-    val dir = dirFor(sfDir, "lexical_retired",
-      graft.plans.CachedPlans.dataFingerprint(docs))
-    val base = lexicalBaseDir(spark, sfDir)
-    built.computeIfAbsent(dir, _ => {
-      val reusable =
-        try DedupIndex.loadLexical(spark, dir).params.termNgram == 2
-        catch {
-          case _: IllegalArgumentException | _: IllegalStateException =>
-            false
-        }
-      if (!reusable)
-        cloneIndex(spark, base, dir)
-      DedupIndex.retireLexical(
-        docs.filter(col("doc_id") % 10 === 0).select(col("doc_id")),
-        "doc_id", dir)
-      java.lang.Boolean.TRUE
-    })
-    loadLexicalMemo(spark, dir)
-  }
-
-  /** [[lexicalRetired]] carried one step further: after the delete
-    * batch retires, [[DedupIndex.compactLexical]] physically rewrites
-    * the components — dead postings/forward rows/ledger rows dropped,
-    * the signed df and stats delta rows collapsed to their live
-    * aggregates — and clears the tombstones. The probe then runs on the
-    * fast tombstone-free load path over compacted files, and the SAME
-    * live-corpus recompute oracle gates the rewrite itself: a dropped
-    * live posting, a kept dead one, a mis-collapsed df or stats row, or
-    * a broken bucket layout all hash-mismatch. Re-runs compact on reuse
-    * (no-op when nothing is tombstoned).
-    */
-  def lexicalCompacted(spark: SparkSession,
-      sfDir: String): DedupIndex.LexicalIndex = {
-    val docs = tbl(spark, sfDir, "documents")
-    val dir = dirFor(sfDir, "lexical_compacted",
-      graft.plans.CachedPlans.dataFingerprint(docs))
-    val base = lexicalBaseDir(spark, sfDir)
-    built.computeIfAbsent(dir, _ => {
-      val reusable =
-        try DedupIndex.loadLexical(spark, dir).params.termNgram == 2
-        catch {
-          case _: IllegalArgumentException | _: IllegalStateException =>
-            false
-        }
-      if (!reusable)
-        cloneIndex(spark, base, dir)
-      DedupIndex.retireLexical(
-        docs.filter(col("doc_id") % 10 === 0).select(col("doc_id")),
-        "doc_id", dir)
-      DedupIndex.compactLexical(spark, dir)
-      java.lang.Boolean.TRUE
-    })
-    loadLexicalMemo(spark, dir)
-  }
-
-  /** Lexical index over the full documents table then fed a CDC UPDATE
-    * batch: the `doc_id % 10 == 0` slice re-absorbs with CHANGED text
-    * (the generational refresh — displaced postings tombstone, new
-    * postings land, df/doclen/total_len deltas commit, all in one
-    * staged batch) and the `doc_id % 6 == 0` slice with UNCHANGED text
-    * (the no-op rows). Re-runs the absorb on reuse — content-aware
-    * idempotent, so the gate exercises the replay path.
-    */
-  def lexicalRefreshed(spark: SparkSession,
-      sfDir: String): DedupIndex.LexicalIndex = {
-    val docs = tbl(spark, sfDir, "documents")
-    val dir = dirFor(sfDir, "lexical_refreshed",
-      graft.plans.CachedPlans.dataFingerprint(docs))
-    val base = lexicalBaseDir(spark, sfDir)
-    built.computeIfAbsent(dir, _ => {
-      val reusable =
-        try DedupIndex.loadLexical(spark, dir).params.termNgram == 2
-        catch {
-          case _: IllegalArgumentException | _: IllegalStateException =>
-            false
-        }
-      if (!reusable)
-        cloneIndex(spark, base, dir)
-      DedupIndex.appendLexical(
-        docs.filter(col("doc_id") % 10 === 0 || col("doc_id") % 6 === 0)
-          .select(col("doc_id"),
-            when(col("doc_id") % 10 === 0,
-              concat(col("text"), lit(RefreshSuffix)))
-              .otherwise(col("text")).as("text")),
-        "doc_id", "text", dir)
-      java.lang.Boolean.TRUE
-    })
-    loadLexicalMemo(spark, dir)
-  }
-
-  /** DuckDB view of the documents table AFTER the CDC update batch
-    * [[lexicalRefreshed]] absorbed — the FULL-corpus twin of
-    * [[refreshedDocsSql]] (the lexical index indexes every doc, not
-    * the even half).
-    */
-  def refreshedAllDocsSql: String =
-    "(SELECT doc_id, CASE WHEN doc_id % 10 = 0 " +
-      s"THEN text || '$RefreshSuffix' ELSE text END AS text " +
-      "FROM documents)"
-
-  /** Vector-ANN index over even-vec_id embeddings (2 hyperplanes, dim 64
-    * — the exact geometry of `embed_incremental`).
-    */
-  def vectors(spark: SparkSession, sfDir: String): DedupIndex.VectorIndex =
-    vectorIndex(spark, sfDir, "vectors", evenHalf = true)
+  def text(spark: SparkSession, sfDir: String): DedupIndex.TextIndex =
+    textFx(spark, sfDir)
 
   /** Text index built over the even docs then GROWN by absorbing the
     * `doc_id % 4 == 1` batch ([[DedupIndex.appendText]]'s staged
     * crash-atomic commit) — the daily-batch loop as a declared,
-    * oracle-gated surface. The absorb re-runs even on reuse: it is
-    * idempotent by contract (freshness anti-join), so the replayed-batch
-    * path is exercised by the gate itself.
+    * oracle-gated surface.
     */
   def textAbsorbed(spark: SparkSession,
-      sfDir: String): DedupIndex.TextIndex = {
-    val docs = tbl(spark, sfDir, "documents")
-    val dir = dirFor(sfDir, "text_absorbed",
-      graft.plans.CachedPlans.dataFingerprint(docs))
-    val base = textBaseDir(spark, sfDir)
-    built.computeIfAbsent(dir, _ => {
-      val reusable =
-        try {
-          val p = DedupIndex.loadText(spark, dir).params
-          p.shingleN == 3 && p.numHashes == 12 && p.bands == 4 && p.portable
-        } catch {
-          case _: IllegalArgumentException | _: IllegalStateException =>
-            false
-        }
-      if (!reusable)
-        cloneIndex(spark, base, dir)
-      DedupIndex.appendText(docs.filter(col("doc_id") % 4 === 1),
-        "doc_id", "text", dir)
-      java.lang.Boolean.TRUE
-    })
-    loadTextMemo(spark, dir)
-  }
+      sfDir: String): DedupIndex.TextIndex = textAbsorbedFx(spark, sfDir)
 
   /** Text index built over the even docs then fed a CDC DELETE batch:
     * the `doc_id % 10 == 0` slice retires through
     * [[DedupIndex.retireText]]'s staged tombstone commit, so probes see
-    * the live corpus only (`doc_id % 2 == 0 AND doc_id % 10 != 0`). The
-    * retire re-runs even on reuse — it is idempotent by contract
-    * (replayed delete batches commit nothing), so the replay path is
-    * exercised by the gate itself, exactly like [[textAbsorbed]]'s
-    * absorb.
+    * the live corpus only (`doc_id % 2 == 0 AND doc_id % 10 != 0`).
     */
   def textRetired(spark: SparkSession,
-      sfDir: String): DedupIndex.TextIndex = {
-    val docs = tbl(spark, sfDir, "documents")
-    val dir = dirFor(sfDir, "text_retired",
-      graft.plans.CachedPlans.dataFingerprint(docs))
-    val base = textBaseDir(spark, sfDir)
-    built.computeIfAbsent(dir, _ => {
-      val reusable =
-        try {
-          val p = DedupIndex.loadText(spark, dir).params
-          p.shingleN == 3 && p.numHashes == 12 && p.bands == 4 && p.portable
-        } catch {
-          case _: IllegalArgumentException | _: IllegalStateException =>
-            false
-        }
-      if (!reusable)
-        cloneIndex(spark, base, dir)
-      DedupIndex.retireText(
-        docs.filter(col("doc_id") % 2 === 0 && col("doc_id") % 10 === 0)
-          .select(col("doc_id")),
-        "doc_id", dir)
-      java.lang.Boolean.TRUE
-    })
-    loadTextMemo(spark, dir)
-  }
+      sfDir: String): DedupIndex.TextIndex = textRetiredFx(spark, sfDir)
 
   /** Text index built over the even docs then fed a CDC UPDATE batch:
     * the `doc_id % 10 == 0` slice re-absorbs with CHANGED text (the
     * generational refresh — displaced generations tombstone, new
     * content lands at the next ordinal in one staged commit), the
     * `doc_id % 6 == 0` slice re-absorbs with UNCHANGED text (the no-op
-    * rows). The absorb re-runs on reuse: replaying the whole update
-    * batch is content-aware idempotent, so the gate itself exercises
-    * the replay path.
+    * rows).
     */
   def textRefreshed(spark: SparkSession,
-      sfDir: String): DedupIndex.TextIndex = {
-    val docs = tbl(spark, sfDir, "documents")
-    val dir = dirFor(sfDir, "text_refreshed",
-      graft.plans.CachedPlans.dataFingerprint(docs))
-    val base = textBaseDir(spark, sfDir)
-    built.computeIfAbsent(dir, _ => {
-      val reusable =
-        try {
-          val p = DedupIndex.loadText(spark, dir).params
-          p.shingleN == 3 && p.numHashes == 12 && p.bands == 4 && p.portable
-        } catch {
-          case _: IllegalArgumentException | _: IllegalStateException =>
-            false
-        }
-      if (!reusable)
-        cloneIndex(spark, base, dir)
-      DedupIndex.appendText(
-        docs.filter(col("doc_id") % 2 === 0 &&
-            (col("doc_id") % 10 === 0 || col("doc_id") % 6 === 0))
-          .select(col("doc_id"),
-            when(col("doc_id") % 10 === 0,
-              concat(col("text"), lit(RefreshSuffix)))
-              .otherwise(col("text")).as("text")),
-        "doc_id", "text", dir)
-      java.lang.Boolean.TRUE
-    })
-    loadTextMemo(spark, dir)
-  }
+      sfDir: String): DedupIndex.TextIndex = textRefreshedFx(spark, sfDir)
 
-  /** The SQL literal the refreshed queries append to updated docs — must
-    * match [[refreshedDocsSql]] exactly.
+  /** Text index taken through a full delete→re-insert cycle: the even
+    * `% 10` slice retires (CDC DELETE), then the `% 20 == 0` HALF of it
+    * re-absorbs with its ORIGINAL content — the generational
+    * resurrection path, no compaction in between. Live corpus = even
+    * ids minus the still-retired `% 10` half. Replay re-tombstones the
+    * resurrected generations and resurrects them again — same fixed
+    * point.
     */
-  val RefreshSuffix = " refreshed edition two"
+  def textResurrected(spark: SparkSession,
+      sfDir: String): DedupIndex.TextIndex =
+    textResurrectedFx(spark, sfDir)
+
+  /** [[textRetired]] carried one step further: after the delete batch
+    * retires, [[DedupIndex.compactText]] physically rewrites the
+    * components and clears the tombstones — so the probe this index
+    * serves runs on the fast tombstone-free load path over compacted
+    * files, and the oracle (the SAME live-corpus recompute as the
+    * retired flavor) gates the compaction rewrite itself: a compaction
+    * that dropped a live row, kept a retired one, or broke a bucket
+    * layout would hash-mismatch.
+    */
+  def textCompacted(spark: SparkSession,
+      sfDir: String): DedupIndex.TextIndex = textCompactedFx(spark, sfDir)
 
   /** DuckDB view of the documents table AFTER the CDC update batch the
     * refreshed index absorbed: the even `% 10` slice carries the new
@@ -444,77 +290,190 @@ object QueryIndexes {
       s"THEN text || '$RefreshSuffix' ELSE text END AS text " +
       "FROM documents)"
 
-  /** Text index taken through a full delete→re-insert cycle: the even
-    * `% 10` slice retires (CDC DELETE), then the `% 20 == 0` HALF of it
-    * re-absorbs with its ORIGINAL content — the generational
-    * resurrection path, no compaction in between. Live corpus = even
-    * ids minus the still-retired `% 10` half. Re-runs the cycle on
-    * reuse (retire re-tombstones the resurrected generations, absorb
-    * resurrects them again — same fixed point, replay exercised).
+  // ---------------------------------------------------------- lexical
+
+  private val lexicalFx = written("lexical", LexicalFamily) {
+    (docs, dir) =>
+      DedupIndex.writeLexical(docs, "doc_id", "text", dir, termNgram = 2)
+  }
+  private def retireLexicalTenth(docs: DataFrame, dir: String): Unit =
+    DedupIndex.retireLexical(
+      docs.filter(col("doc_id") % 10 === 0).select(col("doc_id")),
+      "doc_id", dir)
+  private val lexicalRetiredFx =
+    variant("lexical_retired", lexicalFx)(retireLexicalTenth)
+  private val lexicalCompactedFx = variant("lexical_compacted",
+    lexicalFx) { (docs, dir) =>
+    retireLexicalTenth(docs, dir)
+    DedupIndex.compactLexical(docs.sparkSession, dir)
+  }
+  private val lexicalRefreshedFx = variant("lexical_refreshed",
+    lexicalFx) { (docs, dir) =>
+    DedupIndex.appendLexical(
+      docs.filter(col("doc_id") % 10 === 0 || col("doc_id") % 6 === 0)
+        .select(col("doc_id"), refreshedText(col("doc_id") % 10 === 0)),
+      "doc_id", "text", dir)
+  }
+  private val lexicalCuratedFx = new Fixture[DedupIndex.LexicalIndex](
+    "lexical_curated", LexicalFamily, None, Seq("documents"),
+    RetrievalQueries.curatedDocs(_, _),
+    (cur, dir) => DedupIndex.writeLexical(
+      cur.filter(col("doc_id") % 2 === 0), "doc_id", "text", dir,
+      termNgram = 2),
+    (cur, dir) => DedupIndex.appendLexical(
+      cur.filter(col("doc_id") % 2 === 1), "doc_id", "text", dir))
+
+  /** BM25 lexical index over the FULL documents table (bigram terms —
+    * the exact geometry of `text_bm25_topk`, whose query slice probes
+    * the same corpus it is drawn from).
     */
-  def textResurrected(spark: SparkSession,
-      sfDir: String): DedupIndex.TextIndex = {
-    val docs = tbl(spark, sfDir, "documents")
-    val dir = dirFor(sfDir, "text_resurrected",
-      graft.plans.CachedPlans.dataFingerprint(docs))
-    val base = textBaseDir(spark, sfDir)
-    built.computeIfAbsent(dir, _ => {
-      val reusable =
-        try {
-          val p = DedupIndex.loadText(spark, dir).params
-          p.shingleN == 3 && p.numHashes == 12 && p.bands == 4 && p.portable
-        } catch {
-          case _: IllegalArgumentException | _: IllegalStateException =>
-            false
-        }
-      if (!reusable)
-        cloneIndex(spark, base, dir)
-      DedupIndex.retireText(
-        docs.filter(col("doc_id") % 2 === 0 && col("doc_id") % 10 === 0)
-          .select(col("doc_id")),
-        "doc_id", dir)
-      DedupIndex.appendText(
-        docs.filter(col("doc_id") % 20 === 0),
-        "doc_id", "text", dir)
-      java.lang.Boolean.TRUE
-    })
-    loadTextMemo(spark, dir)
+  def lexical(spark: SparkSession,
+      sfDir: String): DedupIndex.LexicalIndex = lexicalFx(spark, sfDir)
+
+  /** Lexical index over the full documents table then fed a CDC DELETE
+    * batch: the `doc_id % 10 == 0` slice retires through
+    * [[DedupIndex.retireLexical]]'s staged commit — tombstones arm AND
+    * the retired docs' df/length/corpus-stats contributions reverse in
+    * the same commit, so probes score the surviving corpus exactly
+    * (stale-postings drift is the judge-flagged gap this closes).
+    */
+  def lexicalRetired(spark: SparkSession,
+      sfDir: String): DedupIndex.LexicalIndex =
+    lexicalRetiredFx(spark, sfDir)
+
+  /** [[lexicalRetired]] carried one step further: after the delete
+    * batch retires, [[DedupIndex.compactLexical]] physically rewrites
+    * the components — dead postings/forward rows/ledger rows dropped,
+    * the signed df and stats delta rows collapsed to their live
+    * aggregates — and clears the tombstones. The probe then runs on the
+    * fast tombstone-free load path over compacted files, and the SAME
+    * live-corpus recompute oracle gates the rewrite itself: a dropped
+    * live posting, a kept dead one, a mis-collapsed df or stats row, or
+    * a broken bucket layout all hash-mismatch.
+    */
+  def lexicalCompacted(spark: SparkSession,
+      sfDir: String): DedupIndex.LexicalIndex =
+    lexicalCompactedFx(spark, sfDir)
+
+  /** Lexical index over the full documents table then fed a CDC UPDATE
+    * batch: the `doc_id % 10 == 0` slice re-absorbs with CHANGED text
+    * (the generational refresh — displaced postings tombstone, new
+    * postings land, df/doclen/total_len deltas commit, all in one
+    * staged batch) and the `doc_id % 6 == 0` slice with UNCHANGED text
+    * (the no-op rows).
+    */
+  def lexicalRefreshed(spark: SparkSession,
+      sfDir: String): DedupIndex.LexicalIndex =
+    lexicalRefreshedFx(spark, sfDir)
+
+  /** The index-served capstone's LEXICAL artifact: a standing BM25
+    * index maintained to EXACTLY the curated corpus — built over the
+    * curated even half, the odd half ABSORBED through the generational
+    * CDC path ([[DedupIndex.appendLexical]], signed-df deltas in the
+    * same staged commit), so the capstone serves from an index whose
+    * construction exercised the maintained-index contract: live stats
+    * == recompute over the full curated corpus (`text_bm25_indexed*`'s
+    * standing gate), which is what lets `retrieval_e2e_indexed` share
+    * the plain recompute oracle.
+    */
+  def lexicalCurated(spark: SparkSession,
+      sfDir: String): DedupIndex.LexicalIndex =
+    lexicalCuratedFx(spark, sfDir)
+
+  /** DuckDB view of the documents table AFTER the CDC update batch
+    * [[lexicalRefreshed]] absorbed — the FULL-corpus twin of
+    * [[refreshedDocsSql]] (the lexical index indexes every doc, not
+    * the even half).
+    */
+  def refreshedAllDocsSql: String =
+    "(SELECT doc_id, CASE WHEN doc_id % 10 = 0 " +
+      s"THEN text || '$RefreshSuffix' ELSE text END AS text " +
+      "FROM documents)"
+
+  // ------------------------------------------------------------ media
+
+  /** One media modality's six fixtures: the base over the k-even half of
+    * the synthesized corpus (k = doc_id div 20 — see
+    * [[DedupQueries.incrementalAhash]] for why the media split must mix
+    * within (lang, source) template groups), rendered by `payloads` and
+    * indexed under `coder`, and its five lifecycle variants. The verbs
+    * are coder-agnostic: [[DedupIndex.appendMedia]] derives codes via
+    * the index's pinned coder, so the absorb path's coder dispatch is
+    * itself oracle-gated.
+    *   - absorbed: the `k % 4 == 1` batch absorbs.
+    *   - retired: the `k % 10 == 0` slice CDC-deletes through
+    *     [[DedupIndex.retireMedia]]'s staged tombstone commit.
+    *   - compacted: retired, then [[DedupIndex.compactMedia]] rewrites
+    *     both components and clears the tombstones; the SAME live-corpus
+    *     oracle gates the rewrite.
+    *   - resurrected: retired, then the `k % 20 == 0` half re-absorbs
+    *     with ORIGINAL payload bytes — generation-scoped tombstones must
+    *     revive exactly the re-absorbed items.
+    *   - refreshed: a CDC UPDATE batch re-absorbs — the `k % 10 == 0`
+    *     slice rendered from CHANGED text (new bytes, usually a new
+    *     code: the generational refresh) and the even `k % 6 == 0`
+    *     slice byte-identical (the no-op rows).
+    * The build decodes each payload exactly once; probes never touch
+    * corpus payloads again.
+    */
+  private final class MediaFixtures(kind: String, coder: String,
+      payloads: DataFrame => DataFrame) {
+    private def k(m: Int) = expr(s"(doc_id div 20) % $m")
+    private def retireTenth(docs: DataFrame, dir: String): Unit =
+      DedupIndex.retireMedia(docs.filter(k(10) === 0)
+        .select(col("doc_id")), "doc_id", dir)
+    private def absorb(batch: DataFrame, dir: String): Unit =
+      DedupIndex.appendMedia(payloads(batch), "doc_id", "payload", dir)
+
+    val base = written(kind, mediaFamily(coder)) { (docs, dir) =>
+      DedupIndex.writeMedia(payloads(docs.filter(k(2) === 0)),
+        "doc_id", "payload", dir, coder = coder)
+    }
+    val absorbed = variant(s"${kind}_absorbed", base) { (docs, dir) =>
+      absorb(docs.filter(k(4) === 1), dir)
+    }
+    val retired = variant(s"${kind}_retired", base)(retireTenth)
+    val compacted = variant(s"${kind}_compacted", base) { (docs, dir) =>
+      retireTenth(docs, dir)
+      DedupIndex.compactMedia(docs.sparkSession, dir)
+    }
+    val resurrected = variant(s"${kind}_resurrected", base) {
+      (docs, dir) =>
+        retireTenth(docs, dir)
+        absorb(docs.filter(k(20) === 0), dir)
+    }
+    val refreshed = variant(s"${kind}_refreshed", base) { (docs, dir) =>
+      absorb(docs.filter(k(10) === 0 || (k(6) === 0 && k(2) === 0))
+        .select(col("doc_id"), col("lang"), col("source"),
+          refreshedText(k(10) === 0)), dir)
+    }
   }
 
-  /** Whether `dir` holds a loadable media index with the fixture
-    * geometry (4 × 16-bit bands — the `mm_ahash_incremental*` contract).
-    */
-  private def mediaParamsReusable(spark: SparkSession,
-      dir: String, coder: String = "image_ahash"): Boolean =
-    try {
-      val p = DedupIndex.loadMedia(spark, dir).params
-      p.bands == 4 && p.coder == coder
-    } catch {
-      case _: IllegalArgumentException | _: IllegalStateException => false
-    }
+  private val image =
+    new MediaFixtures("media", "image_ahash", TextQueries.ahashPayloads)
+  private val audio = new MediaFixtures("media_audio", "audio_energy",
+    TextQueries.audioPayloads)
+  private val video = new MediaFixtures("media_video", "video_framehash",
+    TextQueries.videoPayloads)
 
   /** Media (perceptual-hash) index over the k-even half of the
-    * synthesized BMP corpus (k = doc_id div 20 — see
-    * [[DedupQueries.incrementalAhash]] for why the media split must mix
-    * within (lang, source) template groups) via
-    * [[TextQueries.ahashPayloads]] — the corpus side of
-    * `mm_ahash_incremental_indexed`. The build decodes each payload
-    * exactly once; probes never touch corpus payloads again.
+    * synthesized BMP corpus via [[TextQueries.ahashPayloads]] — the
+    * corpus side of `mm_ahash_incremental_indexed`; its variants are
+    * [[MediaFixtures]]'s lifecycle square.
     */
-  def media(spark: SparkSession, sfDir: String): DedupIndex.MediaIndex = {
-    val docs = tbl(spark, sfDir, "documents")
-    val dir = dirFor(sfDir, "media",
-      graft.plans.CachedPlans.dataFingerprint(docs))
-    built.computeIfAbsent(dir, _ => {
-      if (!mediaParamsReusable(spark, dir))
-        DedupIndex.writeMedia(
-          TextQueries.ahashPayloads(
-            docs.filter(expr("(doc_id div 20) % 2") === 0)),
-          "doc_id", "payload", dir)
-      java.lang.Boolean.TRUE
-    })
-    loadMediaMemo(spark, dir)
-  }
+  def media(spark: SparkSession, sfDir: String): DedupIndex.MediaIndex =
+    image.base(spark, sfDir)
+  def mediaAbsorbed(spark: SparkSession,
+      sfDir: String): DedupIndex.MediaIndex = image.absorbed(spark, sfDir)
+  def mediaRetired(spark: SparkSession,
+      sfDir: String): DedupIndex.MediaIndex = image.retired(spark, sfDir)
+  def mediaCompacted(spark: SparkSession,
+      sfDir: String): DedupIndex.MediaIndex = image.compacted(spark, sfDir)
+  def mediaResurrected(spark: SparkSession,
+      sfDir: String): DedupIndex.MediaIndex =
+    image.resurrected(spark, sfDir)
+  def mediaRefreshed(spark: SparkSession,
+      sfDir: String): DedupIndex.MediaIndex = image.refreshed(spark, sfDir)
 
   /** [[media]]'s AUDIO twin: the same k-even corpus split rendered to
     * 128-sample WAVs ([[TextQueries.audioPayloads]]) and indexed with
@@ -524,20 +483,18 @@ object QueryIndexes {
     * keys from the bucketed components.
     */
   def mediaAudio(spark: SparkSession,
-      sfDir: String): DedupIndex.MediaIndex = {
-    val docs = tbl(spark, sfDir, "documents")
-    val dir = dirFor(sfDir, "media_audio",
-      graft.plans.CachedPlans.dataFingerprint(docs))
-    built.computeIfAbsent(dir, _ => {
-      if (!mediaParamsReusable(spark, dir, coder = "audio_energy"))
-        DedupIndex.writeMedia(
-          TextQueries.audioPayloads(
-            docs.filter(expr("(doc_id div 20) % 2") === 0)),
-          "doc_id", "payload", dir, coder = "audio_energy")
-      java.lang.Boolean.TRUE
-    })
-    loadMediaMemo(spark, dir)
-  }
+      sfDir: String): DedupIndex.MediaIndex = audio.base(spark, sfDir)
+  def mediaAudioAbsorbed(spark: SparkSession,
+      sfDir: String): DedupIndex.MediaIndex = audio.absorbed(spark, sfDir)
+  def mediaAudioRetired(spark: SparkSession,
+      sfDir: String): DedupIndex.MediaIndex = audio.retired(spark, sfDir)
+  def mediaAudioCompacted(spark: SparkSession,
+      sfDir: String): DedupIndex.MediaIndex = audio.compacted(spark, sfDir)
+  def mediaAudioResurrected(spark: SparkSession,
+      sfDir: String): DedupIndex.MediaIndex =
+    audio.resurrected(spark, sfDir)
+  def mediaAudioRefreshed(spark: SparkSession,
+      sfDir: String): DedupIndex.MediaIndex = audio.refreshed(spark, sfDir)
 
   /** [[media]]'s VIDEO twin: the k-even corpus rendered to 4-frame GIF
     * clips ([[TextQueries.videoPayloads]]) and indexed with the
@@ -546,387 +503,18 @@ object QueryIndexes {
     * exactly once at build time.
     */
   def mediaVideo(spark: SparkSession,
-      sfDir: String): DedupIndex.MediaIndex = {
-    val docs = tbl(spark, sfDir, "documents")
-    val dir = dirFor(sfDir, "media_video",
-      graft.plans.CachedPlans.dataFingerprint(docs))
-    built.computeIfAbsent(dir, _ => {
-      if (!mediaParamsReusable(spark, dir, coder = "video_framehash"))
-        DedupIndex.writeMedia(
-          TextQueries.videoPayloads(
-            docs.filter(expr("(doc_id div 20) % 2") === 0)),
-          "doc_id", "payload", dir, coder = "video_framehash")
-      java.lang.Boolean.TRUE
-    })
-    loadMediaMemo(spark, dir)
-  }
-
-  /** The audio lifecycle square's VIDEO twins: the same coder-agnostic
-    * verbs against the `video_framehash` index, clips rendered by
-    * [[TextQueries.videoPayloads]] — absorb of the `k % 4 == 1` batch,
-    * retire of the `k % 10 == 0` slice, compaction, generational
-    * resurrection of the `k % 20 == 0` half, and the CDC-update refresh
-    * (WAV→GIF difference only; splits and verbs identical).
-    */
+      sfDir: String): DedupIndex.MediaIndex = video.base(spark, sfDir)
   def mediaVideoAbsorbed(spark: SparkSession,
-      sfDir: String): DedupIndex.MediaIndex = {
-    val docs = tbl(spark, sfDir, "documents")
-    val dir = dirFor(sfDir, "media_video_absorbed",
-      graft.plans.CachedPlans.dataFingerprint(docs))
-    val base = mediaVideoBaseDir(spark, sfDir)
-    built.computeIfAbsent(dir, _ => {
-      if (!mediaParamsReusable(spark, dir, coder = "video_framehash"))
-        cloneIndex(spark, base, dir)
-      DedupIndex.appendMedia(
-        TextQueries.videoPayloads(
-          docs.filter(expr("(doc_id div 20) % 4") === 1)),
-        "doc_id", "payload", dir)
-      java.lang.Boolean.TRUE
-    })
-    loadMediaMemo(spark, dir)
-  }
-
+      sfDir: String): DedupIndex.MediaIndex = video.absorbed(spark, sfDir)
   def mediaVideoRetired(spark: SparkSession,
-      sfDir: String): DedupIndex.MediaIndex = {
-    val docs = tbl(spark, sfDir, "documents")
-    val dir = dirFor(sfDir, "media_video_retired",
-      graft.plans.CachedPlans.dataFingerprint(docs))
-    val base = mediaVideoBaseDir(spark, sfDir)
-    built.computeIfAbsent(dir, _ => {
-      if (!mediaParamsReusable(spark, dir, coder = "video_framehash"))
-        cloneIndex(spark, base, dir)
-      DedupIndex.retireMedia(
-        docs.filter(expr("(doc_id div 20) % 10") === 0)
-          .select(col("doc_id")),
-        "doc_id", dir)
-      java.lang.Boolean.TRUE
-    })
-    loadMediaMemo(spark, dir)
-  }
-
+      sfDir: String): DedupIndex.MediaIndex = video.retired(spark, sfDir)
   def mediaVideoCompacted(spark: SparkSession,
-      sfDir: String): DedupIndex.MediaIndex = {
-    val docs = tbl(spark, sfDir, "documents")
-    val dir = dirFor(sfDir, "media_video_compacted",
-      graft.plans.CachedPlans.dataFingerprint(docs))
-    val base = mediaVideoBaseDir(spark, sfDir)
-    built.computeIfAbsent(dir, _ => {
-      if (!mediaParamsReusable(spark, dir, coder = "video_framehash"))
-        cloneIndex(spark, base, dir)
-      DedupIndex.retireMedia(
-        docs.filter(expr("(doc_id div 20) % 10") === 0)
-          .select(col("doc_id")),
-        "doc_id", dir)
-      DedupIndex.compactMedia(spark, dir)
-      java.lang.Boolean.TRUE
-    })
-    loadMediaMemo(spark, dir)
-  }
-
+      sfDir: String): DedupIndex.MediaIndex = video.compacted(spark, sfDir)
   def mediaVideoResurrected(spark: SparkSession,
-      sfDir: String): DedupIndex.MediaIndex = {
-    val docs = tbl(spark, sfDir, "documents")
-    val dir = dirFor(sfDir, "media_video_resurrected",
-      graft.plans.CachedPlans.dataFingerprint(docs))
-    val base = mediaVideoBaseDir(spark, sfDir)
-    built.computeIfAbsent(dir, _ => {
-      if (!mediaParamsReusable(spark, dir, coder = "video_framehash"))
-        cloneIndex(spark, base, dir)
-      DedupIndex.retireMedia(
-        docs.filter(expr("(doc_id div 20) % 10") === 0)
-          .select(col("doc_id")),
-        "doc_id", dir)
-      DedupIndex.appendMedia(
-        TextQueries.videoPayloads(
-          docs.filter(expr("(doc_id div 20) % 20") === 0)),
-        "doc_id", "payload", dir)
-      java.lang.Boolean.TRUE
-    })
-    loadMediaMemo(spark, dir)
-  }
-
+      sfDir: String): DedupIndex.MediaIndex =
+    video.resurrected(spark, sfDir)
   def mediaVideoRefreshed(spark: SparkSession,
-      sfDir: String): DedupIndex.MediaIndex = {
-    val docs = tbl(spark, sfDir, "documents")
-    val dir = dirFor(sfDir, "media_video_refreshed",
-      graft.plans.CachedPlans.dataFingerprint(docs))
-    val base = mediaVideoBaseDir(spark, sfDir)
-    built.computeIfAbsent(dir, _ => {
-      if (!mediaParamsReusable(spark, dir, coder = "video_framehash"))
-        cloneIndex(spark, base, dir)
-      DedupIndex.appendMedia(
-        TextQueries.videoPayloads(
-          docs.filter(expr("(doc_id div 20) % 10") === 0 ||
-              (expr("(doc_id div 20) % 6") === 0 &&
-                expr("(doc_id div 20) % 2") === 0))
-            .select(col("doc_id"), col("lang"), col("source"),
-              when(expr("(doc_id div 20) % 10") === 0,
-                concat(col("text"), lit(RefreshSuffix)))
-                .otherwise(col("text")).as("text"))),
-        "doc_id", "payload", dir)
-      java.lang.Boolean.TRUE
-    })
-    loadMediaMemo(spark, dir)
-  }
-
-  /** [[mediaAbsorbed]]'s audio twin: the `k % 4 == 1` WAV batch absorbs
-    * through the SAME [[DedupIndex.appendMedia]] staged commit — which
-    * derives its codes via the index's pinned `audio_energy` coder, so
-    * the absorb path's coder dispatch is itself oracle-gated.
-    */
-  def mediaAudioAbsorbed(spark: SparkSession,
-      sfDir: String): DedupIndex.MediaIndex = {
-    val docs = tbl(spark, sfDir, "documents")
-    val dir = dirFor(sfDir, "media_audio_absorbed",
-      graft.plans.CachedPlans.dataFingerprint(docs))
-    val base = mediaAudioBaseDir(spark, sfDir)
-    built.computeIfAbsent(dir, _ => {
-      if (!mediaParamsReusable(spark, dir, coder = "audio_energy"))
-        cloneIndex(spark, base, dir)
-      DedupIndex.appendMedia(
-        TextQueries.audioPayloads(
-          docs.filter(expr("(doc_id div 20) % 4") === 1)),
-        "doc_id", "payload", dir)
-      java.lang.Boolean.TRUE
-    })
-    loadMediaMemo(spark, dir)
-  }
-
-  /** [[mediaRetired]]'s audio twin: the `k % 10 == 0` slice CDC-deletes
-    * from the audio-coder index (replayed on reuse — idempotent).
-    */
-  def mediaAudioRetired(spark: SparkSession,
-      sfDir: String): DedupIndex.MediaIndex = {
-    val docs = tbl(spark, sfDir, "documents")
-    val dir = dirFor(sfDir, "media_audio_retired",
-      graft.plans.CachedPlans.dataFingerprint(docs))
-    val base = mediaAudioBaseDir(spark, sfDir)
-    built.computeIfAbsent(dir, _ => {
-      if (!mediaParamsReusable(spark, dir, coder = "audio_energy"))
-        cloneIndex(spark, base, dir)
-      DedupIndex.retireMedia(
-        docs.filter(expr("(doc_id div 20) % 10") === 0)
-          .select(col("doc_id")),
-        "doc_id", dir)
-      java.lang.Boolean.TRUE
-    })
-    loadMediaMemo(spark, dir)
-  }
-
-  /** [[mediaCompacted]]'s audio twin: the `k % 10 == 0` slice retires
-    * from the audio-coder index, then [[DedupIndex.compactMedia]]
-    * physically rewrites the components and clears the tombstones — the
-    * coder-agnostic compaction verbs proven on the image family, gated
-    * here over energy codes. Re-runs compact on reuse (no-op when
-    * nothing is tombstoned).
-    */
-  def mediaAudioCompacted(spark: SparkSession,
-      sfDir: String): DedupIndex.MediaIndex = {
-    val docs = tbl(spark, sfDir, "documents")
-    val dir = dirFor(sfDir, "media_audio_compacted",
-      graft.plans.CachedPlans.dataFingerprint(docs))
-    val base = mediaAudioBaseDir(spark, sfDir)
-    built.computeIfAbsent(dir, _ => {
-      if (!mediaParamsReusable(spark, dir, coder = "audio_energy"))
-        cloneIndex(spark, base, dir)
-      DedupIndex.retireMedia(
-        docs.filter(expr("(doc_id div 20) % 10") === 0)
-          .select(col("doc_id")),
-        "doc_id", dir)
-      DedupIndex.compactMedia(spark, dir)
-      java.lang.Boolean.TRUE
-    })
-    loadMediaMemo(spark, dir)
-  }
-
-  /** [[mediaResurrected]]'s audio twin: the `k % 10 == 0` slice
-    * retires, then its `k % 20 == 0` half re-absorbs with ORIGINAL
-    * WAV bytes — generation-scoped tombstones must revive exactly the
-    * re-absorbed clips. Re-runs the cycle on reuse.
-    */
-  def mediaAudioResurrected(spark: SparkSession,
-      sfDir: String): DedupIndex.MediaIndex = {
-    val docs = tbl(spark, sfDir, "documents")
-    val dir = dirFor(sfDir, "media_audio_resurrected",
-      graft.plans.CachedPlans.dataFingerprint(docs))
-    val base = mediaAudioBaseDir(spark, sfDir)
-    built.computeIfAbsent(dir, _ => {
-      if (!mediaParamsReusable(spark, dir, coder = "audio_energy"))
-        cloneIndex(spark, base, dir)
-      DedupIndex.retireMedia(
-        docs.filter(expr("(doc_id div 20) % 10") === 0)
-          .select(col("doc_id")),
-        "doc_id", dir)
-      DedupIndex.appendMedia(
-        TextQueries.audioPayloads(
-          docs.filter(expr("(doc_id div 20) % 20") === 0)),
-        "doc_id", "payload", dir)
-      java.lang.Boolean.TRUE
-    })
-    loadMediaMemo(spark, dir)
-  }
-
-  /** [[mediaRefreshed]]'s audio twin: a CDC UPDATE batch re-absorbs
-    * into the audio-coder index — the `k % 10 == 0` slice with WAVs
-    * rendered from CHANGED text (new noise samples → new bytes, usually
-    * a new energy code) and the `k % 6 == 0` slice byte-identical (the
-    * no-op rows). Replayed on reuse.
-    */
-  def mediaAudioRefreshed(spark: SparkSession,
-      sfDir: String): DedupIndex.MediaIndex = {
-    val docs = tbl(spark, sfDir, "documents")
-    val dir = dirFor(sfDir, "media_audio_refreshed",
-      graft.plans.CachedPlans.dataFingerprint(docs))
-    val base = mediaAudioBaseDir(spark, sfDir)
-    built.computeIfAbsent(dir, _ => {
-      if (!mediaParamsReusable(spark, dir, coder = "audio_energy"))
-        cloneIndex(spark, base, dir)
-      DedupIndex.appendMedia(
-        TextQueries.audioPayloads(
-          docs.filter(expr("(doc_id div 20) % 10") === 0 ||
-              (expr("(doc_id div 20) % 6") === 0 &&
-                expr("(doc_id div 20) % 2") === 0))
-            .select(col("doc_id"), col("lang"), col("source"),
-              when(expr("(doc_id div 20) % 10") === 0,
-                concat(col("text"), lit(RefreshSuffix)))
-                .otherwise(col("text")).as("text"))),
-        "doc_id", "payload", dir)
-      java.lang.Boolean.TRUE
-    })
-    loadMediaMemo(spark, dir)
-  }
-
-  /** [[textAbsorbed]]'s media twin: k-even payloads indexed, the
-    * `k % 4 == 1` batch absorbed through [[DedupIndex.appendMedia]]'s
-    * staged commit (decode-once, replayed on reuse — content-aware
-    * idempotent).
-    */
-  def mediaAbsorbed(spark: SparkSession,
-      sfDir: String): DedupIndex.MediaIndex = {
-    val docs = tbl(spark, sfDir, "documents")
-    val dir = dirFor(sfDir, "media_absorbed",
-      graft.plans.CachedPlans.dataFingerprint(docs))
-    val base = mediaBaseDir(spark, sfDir)
-    built.computeIfAbsent(dir, _ => {
-      if (!mediaParamsReusable(spark, dir))
-        cloneIndex(spark, base, dir)
-      DedupIndex.appendMedia(
-        TextQueries.ahashPayloads(
-          docs.filter(expr("(doc_id div 20) % 4") === 1)),
-        "doc_id", "payload", dir)
-      java.lang.Boolean.TRUE
-    })
-    loadMediaMemo(spark, dir)
-  }
-
-  /** [[textRetired]]'s media twin: k-even payloads indexed, then the
-    * `k % 10 == 0` slice CDC-deleted through
-    * [[DedupIndex.retireMedia]]'s staged tombstone commit (replayed on
-    * reuse — idempotent by contract).
-    */
-  def mediaRetired(spark: SparkSession,
-      sfDir: String): DedupIndex.MediaIndex = {
-    val docs = tbl(spark, sfDir, "documents")
-    val dir = dirFor(sfDir, "media_retired",
-      graft.plans.CachedPlans.dataFingerprint(docs))
-    val base = mediaBaseDir(spark, sfDir)
-    built.computeIfAbsent(dir, _ => {
-      if (!mediaParamsReusable(spark, dir))
-        cloneIndex(spark, base, dir)
-      DedupIndex.retireMedia(
-        docs.filter(expr("(doc_id div 20) % 10") === 0)
-          .select(col("doc_id")),
-        "doc_id", dir)
-      java.lang.Boolean.TRUE
-    })
-    loadMediaMemo(spark, dir)
-  }
-
-  /** [[mediaRetired]] carried one step further: after the delete batch
-    * retires, [[DedupIndex.compactMedia]] physically rewrites both
-    * components and clears the tombstones — the probe runs on the fast
-    * tombstone-free load path over compacted files, and the SAME
-    * live-corpus oracle gates the rewrite (a dropped live row, a kept
-    * dead one, or a broken bucket layout hash-mismatches). Re-runs
-    * compact on reuse (no-op when nothing is tombstoned).
-    */
-  def mediaCompacted(spark: SparkSession,
-      sfDir: String): DedupIndex.MediaIndex = {
-    val docs = tbl(spark, sfDir, "documents")
-    val dir = dirFor(sfDir, "media_compacted",
-      graft.plans.CachedPlans.dataFingerprint(docs))
-    val base = mediaBaseDir(spark, sfDir)
-    built.computeIfAbsent(dir, _ => {
-      if (!mediaParamsReusable(spark, dir))
-        cloneIndex(spark, base, dir)
-      DedupIndex.retireMedia(
-        docs.filter(expr("(doc_id div 20) % 10") === 0)
-          .select(col("doc_id")),
-        "doc_id", dir)
-      DedupIndex.compactMedia(spark, dir)
-      java.lang.Boolean.TRUE
-    })
-    loadMediaMemo(spark, dir)
-  }
-
-  /** Media index taken through a full delete→re-insert cycle: the
-    * `k % 10 == 0` slice retires, then its `k % 20 == 0` HALF
-    * re-absorbs with ORIGINAL payload bytes — generational
-    * resurrection, no compaction in between (id-keyed tombstones would
-    * have kept the re-absorb dead). Re-runs the cycle on reuse.
-    */
-  def mediaResurrected(spark: SparkSession,
-      sfDir: String): DedupIndex.MediaIndex = {
-    val docs = tbl(spark, sfDir, "documents")
-    val dir = dirFor(sfDir, "media_resurrected",
-      graft.plans.CachedPlans.dataFingerprint(docs))
-    val base = mediaBaseDir(spark, sfDir)
-    built.computeIfAbsent(dir, _ => {
-      if (!mediaParamsReusable(spark, dir))
-        cloneIndex(spark, base, dir)
-      DedupIndex.retireMedia(
-        docs.filter(expr("(doc_id div 20) % 10") === 0)
-          .select(col("doc_id")),
-        "doc_id", dir)
-      DedupIndex.appendMedia(
-        TextQueries.ahashPayloads(
-          docs.filter(expr("(doc_id div 20) % 20") === 0)),
-        "doc_id", "payload", dir)
-      java.lang.Boolean.TRUE
-    })
-    loadMediaMemo(spark, dir)
-  }
-
-  /** [[textRefreshed]]'s media twin: k-even payloads indexed, then a
-    * CDC UPDATE batch re-absorbs — the `k % 10 == 0` slice with
-    * payloads synthesized from CHANGED text (new noise bits → new
-    * bytes, usually a new code: the generational refresh) and the
-    * `k % 6 == 0` slice byte-identical (the no-op rows). Replayed on
-    * reuse.
-    */
-  def mediaRefreshed(spark: SparkSession,
-      sfDir: String): DedupIndex.MediaIndex = {
-    val docs = tbl(spark, sfDir, "documents")
-    val dir = dirFor(sfDir, "media_refreshed",
-      graft.plans.CachedPlans.dataFingerprint(docs))
-    val base = mediaBaseDir(spark, sfDir)
-    built.computeIfAbsent(dir, _ => {
-      if (!mediaParamsReusable(spark, dir))
-        cloneIndex(spark, base, dir)
-      DedupIndex.appendMedia(
-        TextQueries.ahashPayloads(
-          docs.filter(expr("(doc_id div 20) % 10") === 0 ||
-              (expr("(doc_id div 20) % 6") === 0 &&
-                expr("(doc_id div 20) % 2") === 0))
-            .select(col("doc_id"), col("lang"), col("source"),
-              when(expr("(doc_id div 20) % 10") === 0,
-                concat(col("text"), lit(RefreshSuffix)))
-                .otherwise(col("text")).as("text"))),
-        "doc_id", "payload", dir)
-      java.lang.Boolean.TRUE
-    })
-    loadMediaMemo(spark, dir)
-  }
+      sfDir: String): DedupIndex.MediaIndex = video.refreshed(spark, sfDir)
 
   /** DuckDB view of the documents table AFTER the CDC update batch
     * [[mediaRefreshed]] absorbed — [[refreshedDocsSql]] widened to the
@@ -938,19 +526,73 @@ object QueryIndexes {
       s"THEN text || '$RefreshSuffix' ELSE text END " +
       "AS text FROM documents)"
 
-  /** Whether `dir` holds a loadable vector index with the fixture
-    * geometry every vector builder here uses — the ONE place that
-    * contract lives (planes 2, dim 64, 20 centroids, PQ 8x16).
+  // ---------------------------------------------------------- vectors
+
+  private def writeVectors(vecs: DataFrame, dir: String): Unit =
+    DedupIndex.writeVectors(vecs, "vec_id", "embedding", dir,
+      planes = 2, dim = 64)
+  private def absorbQuarter(vecs: DataFrame, dir: String): Unit =
+    DedupIndex.appendVectors(vecs.filter(col("vec_id") % 4 === 1),
+      "vec_id", "embedding", dir)
+  private def retireVectorsTenth(vecs: DataFrame, dir: String): Unit =
+    DedupIndex.retireVectors(evenTenth(vecs, "vec_id"), "vec_id", dir)
+
+  private val vectorsFx = written("vectors", VectorFamily) {
+    (vecs, dir) => writeVectors(vecs.filter(col("vec_id") % 2 === 0), dir)
+  }
+  private val vectorsFullFx =
+    written("vectors_full", VectorFamily)(writeVectors)
+  private val vectorsRefreshedFx = variant("vectors_refreshed",
+    vectorsFx) { (vecs, dir) =>
+    DedupIndex.appendVectors(
+      vecs.filter(col("vec_id") % 2 === 0 &&
+          (col("vec_id") % 10 === 0 || col("vec_id") % 6 === 0))
+        .select(col("vec_id"),
+          when(col("vec_id") % 10 === 0,
+            transform(col("embedding"), v => -v))
+            .otherwise(col("embedding")).as("embedding")),
+      "vec_id", "embedding", dir)
+  }
+  private val vectorsAbsorbedFx =
+    variant("vectors_absorbed", vectorsFx)(absorbQuarter)
+  private val vectorsRetrainedFx = variant("vectors_retrained",
+    vectorsFx) { (vecs, dir) =>
+    absorbQuarter(vecs, dir)
+    DedupIndex.retrainVectors(vecs.sparkSession, dir)
+  }
+  private val vectorsRebuiltFx = variant("vectors_rebuilt", vectorsFx) {
+    (vecs, dir) =>
+      absorbQuarter(vecs, dir)
+      DedupIndex.rebuildVectors(vecs.sparkSession, dir)
+  }
+  private val vectorsRetiredFx =
+    variant("vectors_retired", vectorsFx)(retireVectorsTenth)
+  private val vectorsCompactedFx = variant("vectors_compacted",
+    vectorsFx) { (vecs, dir) =>
+    retireVectorsTenth(vecs, dir)
+    DedupIndex.compactVectors(vecs.sparkSession, dir)
+  }
+  private val vectorsCuratedFx = new Fixture[DedupIndex.VectorIndex](
+    "vectors_curated", VectorFamily, None, Seq("documents", "embeddings"),
+    RetrievalQueries.curatedEmb(_, _),
+    (cur, dir) => writeVectors(cur.filter(col("vec_id") % 2 === 0), dir),
+    { (cur, dir) =>
+      DedupIndex.appendVectors(cur.filter(col("vec_id") % 2 === 1),
+        "vec_id", "embedding", dir)
+      DedupIndex.rebuildVectors(cur.sparkSession, dir)
+    })
+
+  /** Vector-ANN index over even-vec_id embeddings (2 hyperplanes, dim 64
+    * — the exact geometry of `embed_incremental`).
     */
-  private def vectorParamsReusable(spark: SparkSession,
-      dir: String): Boolean =
-    try {
-      val p = DedupIndex.loadVectors(spark, dir).params
-      p.planes == 2 && p.dim == 64 && p.centroids == 20 &&
-        p.pqM == 8 && p.pqKsub == 16
-    } catch {
-      case _: IllegalArgumentException | _: IllegalStateException => false
-    }
+  def vectors(spark: SparkSession, sfDir: String): DedupIndex.VectorIndex =
+    vectorsFx(spark, sfDir)
+
+  /** Full-corpus vector index (every vec_id — the `ann_*` top-k
+    * family's corpus) backing the persisted-IVF top-k.
+    */
+  def vectorsFull(spark: SparkSession,
+      sfDir: String): DedupIndex.VectorIndex = vectorsFullFx(spark, sfDir)
 
   /** [[textRefreshed]]'s vector twin: even vec_ids indexed, then the
     * `% 10` slice re-absorbs with its embedding NEGATED (a maximal
@@ -958,55 +600,15 @@ object QueryIndexes {
     * the `% 6` slice with its embedding unchanged (no-op rows).
     */
   def vectorsRefreshed(spark: SparkSession,
-      sfDir: String): DedupIndex.VectorIndex = {
-    val vecs = tbl(spark, sfDir, "embeddings")
-    val dir = dirFor(sfDir, "vectors_refreshed",
-      graft.plans.CachedPlans.dataFingerprint(vecs))
-    val base = vectorsBaseDir(spark, sfDir)
-    built.computeIfAbsent(dir, _ => {
-      val reusable = vectorParamsReusable(spark, dir)
-      if (!reusable)
-        cloneIndex(spark, base, dir)
-      DedupIndex.appendVectors(
-        vecs.filter(col("vec_id") % 2 === 0 &&
-            (col("vec_id") % 10 === 0 || col("vec_id") % 6 === 0))
-          .select(col("vec_id"),
-            when(col("vec_id") % 10 === 0,
-              transform(col("embedding"), v => -v))
-              .otherwise(col("embedding")).as("embedding")),
-        "vec_id", "embedding", dir)
-      java.lang.Boolean.TRUE
-    })
-    loadVectorsMemo(spark, dir)
-  }
-
-  /** DuckDB view of the embeddings table AFTER the vector update batch
-    * [[vectorsRefreshed]] absorbed.
-    */
-  def refreshedVecsSql: String =
-    "(SELECT vec_id, CASE WHEN vec_id % 2 = 0 AND vec_id % 10 = 0 " +
-      "THEN list_transform(embedding, x -> -x) ELSE embedding END " +
-      "AS embedding FROM embeddings)"
+      sfDir: String): DedupIndex.VectorIndex =
+    vectorsRefreshedFx(spark, sfDir)
 
   /** [[textAbsorbed]]'s vector twin: even vec_ids indexed, the
     * `vec_id % 4 == 1` batch absorbed under the frozen geometry.
     */
   def vectorsAbsorbed(spark: SparkSession,
-      sfDir: String): DedupIndex.VectorIndex = {
-    val vecs = tbl(spark, sfDir, "embeddings")
-    val dir = dirFor(sfDir, "vectors_absorbed",
-      graft.plans.CachedPlans.dataFingerprint(vecs))
-    val base = vectorsBaseDir(spark, sfDir)
-    built.computeIfAbsent(dir, _ => {
-      val reusable = vectorParamsReusable(spark, dir)
-      if (!reusable)
-        cloneIndex(spark, base, dir)
-      DedupIndex.appendVectors(vecs.filter(col("vec_id") % 4 === 1),
-        "vec_id", "embedding", dir)
-      java.lang.Boolean.TRUE
-    })
-    loadVectorsMemo(spark, dir)
-  }
+      sfDir: String): DedupIndex.VectorIndex =
+    vectorsAbsorbedFx(spark, sfDir)
 
   /** [[vectorsAbsorbed]] carried one step further: after the
     * `vec_id % 4 == 1` batch absorbs under the FROZEN build geometry,
@@ -1022,87 +624,8 @@ object QueryIndexes {
     * rewrite — the selection is deterministic).
     */
   def vectorsRetrained(spark: SparkSession,
-      sfDir: String): DedupIndex.VectorIndex = {
-    val vecs = tbl(spark, sfDir, "embeddings")
-    val dir = dirFor(sfDir, "vectors_retrained",
-      graft.plans.CachedPlans.dataFingerprint(vecs))
-    val base = vectorsBaseDir(spark, sfDir)
-    built.computeIfAbsent(dir, _ => {
-      val reusable = vectorParamsReusable(spark, dir)
-      if (!reusable)
-        cloneIndex(spark, base, dir)
-      DedupIndex.appendVectors(vecs.filter(col("vec_id") % 4 === 1),
-        "vec_id", "embedding", dir)
-      DedupIndex.retrainVectors(spark, dir)
-      java.lang.Boolean.TRUE
-    })
-    loadVectorsMemo(spark, dir)
-  }
-
-  /** The index-served capstone's LEXICAL artifact: a standing BM25
-    * index maintained to EXACTLY the curated corpus — built over the
-    * curated even half, the odd half ABSORBED through the generational
-    * CDC path ([[DedupIndex.appendLexical]], signed-df deltas in the
-    * same staged commit), so the capstone serves from an index whose
-    * construction exercised the maintained-index contract: live stats
-    * == recompute over the full curated corpus (`text_bm25_indexed*`'s
-    * standing gate), which is what lets `retrieval_e2e_indexed` share
-    * the plain recompute oracle.
-    */
-  def lexicalCurated(spark: SparkSession,
-      sfDir: String): DedupIndex.LexicalIndex = {
-    val docs = tbl(spark, sfDir, "documents")
-    val dir = dirFor(sfDir, "lexical_curated",
-      graft.plans.CachedPlans.dataFingerprint(docs))
-    built.computeIfAbsent(dir, _ => {
-      val cur = RetrievalQueries.curatedDocs(spark, sfDir)
-      val reusable =
-        try DedupIndex.loadLexical(spark, dir).params.termNgram == 2
-        catch {
-          case _: IllegalArgumentException | _: IllegalStateException =>
-            false
-        }
-      if (!reusable)
-        DedupIndex.writeLexical(cur.filter(col("doc_id") % 2 === 0),
-          "doc_id", "text", dir, termNgram = 2)
-      DedupIndex.appendLexical(cur.filter(col("doc_id") % 2 === 1),
-        "doc_id", "text", dir)
-      java.lang.Boolean.TRUE
-    })
-    loadLexicalMemo(spark, dir)
-  }
-
-  /** The index-served capstone's VECTOR artifact: a standing IVF∘SQ8
-    * index over exactly the curated embedding slice — built over the
-    * curated even half, the odd half absorbed under the frozen build
-    * geometry, then [[DedupIndex.rebuildVectors]] re-derives the FULL
-    * data-dependent geometry (ranges, PQ codebooks, centroids) from the
-    * curated live corpus and re-encodes every stored code. Post-rebuild
-    * the stored state is bit-identical to a fresh build over the whole
-    * curated slice, which is what lets the capstone's oracle derive the
-    * dense leg entirely from the curated relation (rangeW = corpusW =
-    * centW = curated embeddings).
-    */
-  def vectorsCurated(spark: SparkSession,
-      sfDir: String): DedupIndex.VectorIndex = {
-    val docs = tbl(spark, sfDir, "documents")
-    val emb = tbl(spark, sfDir, "embeddings")
-    val dir = dirFor(sfDir, "vectors_curated",
-      graft.plans.CachedPlans.dataFingerprint(docs) + "\u0000" +
-        graft.plans.CachedPlans.dataFingerprint(emb))
-    built.computeIfAbsent(dir, _ => {
-      val cur = RetrievalQueries.curatedEmb(spark, sfDir)
-      val reusable = vectorParamsReusable(spark, dir)
-      if (!reusable)
-        DedupIndex.writeVectors(cur.filter(col("vec_id") % 2 === 0),
-          "vec_id", "embedding", dir, planes = 2, dim = 64)
-      DedupIndex.appendVectors(cur.filter(col("vec_id") % 2 === 1),
-        "vec_id", "embedding", dir)
-      DedupIndex.rebuildVectors(spark, dir)
-      java.lang.Boolean.TRUE
-    })
-    loadVectorsMemo(spark, dir)
-  }
+      sfDir: String): DedupIndex.VectorIndex =
+    vectorsRetrainedFx(spark, sfDir)
 
   /** [[vectorsRetrained]] carried to the top of the maintenance ladder:
     * after the `% 4 == 1` batch absorbs under the FROZEN build geometry,
@@ -1117,167 +640,63 @@ object QueryIndexes {
     * every derivation is deterministic over live content).
     */
   def vectorsRebuilt(spark: SparkSession,
-      sfDir: String): DedupIndex.VectorIndex = {
-    val vecs = tbl(spark, sfDir, "embeddings")
-    val dir = dirFor(sfDir, "vectors_rebuilt",
-      graft.plans.CachedPlans.dataFingerprint(vecs))
-    val base = vectorsBaseDir(spark, sfDir)
-    built.computeIfAbsent(dir, _ => {
-      val reusable = vectorParamsReusable(spark, dir)
-      if (!reusable)
-        cloneIndex(spark, base, dir)
-      DedupIndex.appendVectors(vecs.filter(col("vec_id") % 4 === 1),
-        "vec_id", "embedding", dir)
-      DedupIndex.rebuildVectors(spark, dir)
-      java.lang.Boolean.TRUE
-    })
-    loadVectorsMemo(spark, dir)
-  }
-
-  /** [[textRetired]] carried one step further: after the delete batch
-    * retires, [[DedupIndex.compactText]] physically rewrites the
-    * components and clears the tombstones — so the probe this index
-    * serves runs on the fast tombstone-free load path over compacted
-    * files, and the oracle (the SAME live-corpus recompute as the
-    * retired flavor) gates the compaction rewrite itself: a compaction
-    * that dropped a live row, kept a retired one, or broke a bucket
-    * layout would hash-mismatch. Re-runs compact on reuse (no-op when
-    * nothing is tombstoned).
-    */
-  def textCompacted(spark: SparkSession,
-      sfDir: String): DedupIndex.TextIndex = {
-    val docs = tbl(spark, sfDir, "documents")
-    val dir = dirFor(sfDir, "text_compacted",
-      graft.plans.CachedPlans.dataFingerprint(docs))
-    val base = textBaseDir(spark, sfDir)
-    built.computeIfAbsent(dir, _ => {
-      val reusable =
-        try {
-          val p = DedupIndex.loadText(spark, dir).params
-          p.shingleN == 3 && p.numHashes == 12 && p.bands == 4 && p.portable
-        } catch {
-          case _: IllegalArgumentException | _: IllegalStateException =>
-            false
-        }
-      if (!reusable)
-        cloneIndex(spark, base, dir)
-      DedupIndex.retireText(
-        docs.filter(col("doc_id") % 2 === 0 && col("doc_id") % 10 === 0)
-          .select(col("doc_id")),
-        "doc_id", dir)
-      DedupIndex.compactText(spark, dir)
-      java.lang.Boolean.TRUE
-    })
-    loadTextMemo(spark, dir)
-  }
+      sfDir: String): DedupIndex.VectorIndex =
+    vectorsRebuiltFx(spark, sfDir)
 
   /** [[textRetired]]'s vector twin: even vec_ids indexed, then the
     * `vec_id % 10 == 0` slice retired through
-    * [[DedupIndex.retireVectors]]'s staged tombstone commit. The retire
-    * re-runs on reuse (idempotent replay exercised by the gate).
+    * [[DedupIndex.retireVectors]]'s staged tombstone commit.
     */
   def vectorsRetired(spark: SparkSession,
-      sfDir: String): DedupIndex.VectorIndex = {
-    val vecs = tbl(spark, sfDir, "embeddings")
-    val dir = dirFor(sfDir, "vectors_retired",
-      graft.plans.CachedPlans.dataFingerprint(vecs))
-    val base = vectorsBaseDir(spark, sfDir)
-    built.computeIfAbsent(dir, _ => {
-      val reusable = vectorParamsReusable(spark, dir)
-      if (!reusable)
-        cloneIndex(spark, base, dir)
-      DedupIndex.retireVectors(
-        vecs.filter(col("vec_id") % 2 === 0 && col("vec_id") % 10 === 0)
-          .select(col("vec_id")),
-        "vec_id", dir)
-      java.lang.Boolean.TRUE
-    })
-    loadVectorsMemo(spark, dir)
-  }
+      sfDir: String): DedupIndex.VectorIndex =
+    vectorsRetiredFx(spark, sfDir)
 
   /** [[textCompacted]]'s vector twin: [[vectorsRetired]] carried
     * through [[DedupIndex.compactVectors]]'s REPLACE-mode rewrite, so
     * the probe reads physically tombstone-free `buckets`/`lists`
     * components — oracle-gating the vector compaction rewrite itself
     * (a dead row kept, a live row dropped, or a broken bucket layout
-    * would all flip pairs). Replay-safe on reuse like the text form.
+    * would all flip pairs).
     */
   def vectorsCompacted(spark: SparkSession,
-      sfDir: String): DedupIndex.VectorIndex = {
-    val vecs = tbl(spark, sfDir, "embeddings")
-    val dir = dirFor(sfDir, "vectors_compacted",
-      graft.plans.CachedPlans.dataFingerprint(vecs))
-    val base = vectorsBaseDir(spark, sfDir)
-    built.computeIfAbsent(dir, _ => {
-      val reusable = vectorParamsReusable(spark, dir)
-      if (!reusable)
-        cloneIndex(spark, base, dir)
-      DedupIndex.retireVectors(
-        vecs.filter(col("vec_id") % 2 === 0 && col("vec_id") % 10 === 0)
-          .select(col("vec_id")),
-        "vec_id", dir)
-      DedupIndex.compactVectors(spark, dir)
-      java.lang.Boolean.TRUE
-    })
-    loadVectorsMemo(spark, dir)
-  }
-
-  /** Full-corpus vector index (every vec_id — the `ann_*` top-k
-    * family's corpus) backing the persisted-IVF top-k.
-    */
-  def vectorsFull(spark: SparkSession,
       sfDir: String): DedupIndex.VectorIndex =
-    vectorIndex(spark, sfDir, "vectors_full", evenHalf = false)
+    vectorsCompactedFx(spark, sfDir)
+
+  /** The index-served capstone's VECTOR artifact: a standing IVF∘SQ8
+    * index over exactly the curated embedding slice — built over the
+    * curated even half, the odd half absorbed under the frozen build
+    * geometry, then [[DedupIndex.rebuildVectors]] re-derives the FULL
+    * data-dependent geometry (ranges, PQ codebooks, centroids) from the
+    * curated live corpus and re-encodes every stored code. Post-rebuild
+    * the stored state is bit-identical to a fresh build over the whole
+    * curated slice, which is what lets the capstone's oracle derive the
+    * dense leg entirely from the curated relation (rangeW = corpusW =
+    * centW = curated embeddings).
+    */
+  def vectorsCurated(spark: SparkSession,
+      sfDir: String): DedupIndex.VectorIndex =
+    vectorsCuratedFx(spark, sfDir)
+
+  /** DuckDB view of the embeddings table AFTER the vector update batch
+    * [[vectorsRefreshed]] absorbed.
+    */
+  def refreshedVecsSql: String =
+    "(SELECT vec_id, CASE WHEN vec_id % 2 = 0 AND vec_id % 10 = 0 " +
+      "THEN list_transform(embedding, x -> -x) ELSE embedding END " +
+      "AS embedding FROM embeddings)"
 
   /** The one registry both [[prewarmAll]] and the coverage spec
-    * iterate: every public fixture getter of this object MUST appear
-    * here (QueryIndexesSpec asserts it by reflection — a new getter
-    * added to the query set but not to this list would silently revert
-    * to the serial in-rep-1 build prewarm exists to eliminate, with no
-    * warning).
+    * iterate, derived from the fixture table: every public fixture
+    * getter of this object serves one fixture of that table under its
+    * snake-case name (QueryIndexesSpec asserts it by reflection — a
+    * getter left off would silently revert to the serial in-rep-1 build
+    * prewarm exists to eliminate, with no warning). Bases come first:
+    * the pool is FIFO, so the family bases start on the first free
+    * threads and every variant clones, not builds.
     */
   private[graft] val prewarmFixtures
-      : Seq[(String, (SparkSession, String) => Any)] = Seq(
-      // bases first: the pool is FIFO, so the six family bases start
-      // on the first free threads and every variant clones, not builds
-      "text" -> (text(_, _)),
-      "lexical" -> (lexical(_, _)),
-      "media" -> (media(_, _)),
-      "media_audio" -> (mediaAudio(_, _)),
-      "media_video" -> (mediaVideo(_, _)),
-      "vectors" -> (vectors(_, _)),
-      "vectors_full" -> (vectorsFull(_, _)),
-      "text_absorbed" -> (textAbsorbed(_, _)),
-      "text_retired" -> (textRetired(_, _)),
-      "text_refreshed" -> (textRefreshed(_, _)),
-      "text_resurrected" -> (textResurrected(_, _)),
-      "text_compacted" -> (textCompacted(_, _)),
-      "lexical_retired" -> (lexicalRetired(_, _)),
-      "lexical_compacted" -> (lexicalCompacted(_, _)),
-      "lexical_refreshed" -> (lexicalRefreshed(_, _)),
-      "lexical_curated" -> (lexicalCurated(_, _)),
-      "media_absorbed" -> (mediaAbsorbed(_, _)),
-      "media_retired" -> (mediaRetired(_, _)),
-      "media_refreshed" -> (mediaRefreshed(_, _)),
-      "media_resurrected" -> (mediaResurrected(_, _)),
-      "media_compacted" -> (mediaCompacted(_, _)),
-      "media_audio_absorbed" -> (mediaAudioAbsorbed(_, _)),
-      "media_audio_retired" -> (mediaAudioRetired(_, _)),
-      "media_audio_refreshed" -> (mediaAudioRefreshed(_, _)),
-      "media_audio_resurrected" -> (mediaAudioResurrected(_, _)),
-      "media_audio_compacted" -> (mediaAudioCompacted(_, _)),
-      "media_video_absorbed" -> (mediaVideoAbsorbed(_, _)),
-      "media_video_retired" -> (mediaVideoRetired(_, _)),
-      "media_video_refreshed" -> (mediaVideoRefreshed(_, _)),
-      "media_video_resurrected" -> (mediaVideoResurrected(_, _)),
-      "media_video_compacted" -> (mediaVideoCompacted(_, _)),
-      "vectors_absorbed" -> (vectorsAbsorbed(_, _)),
-      "vectors_retired" -> (vectorsRetired(_, _)),
-      "vectors_refreshed" -> (vectorsRefreshed(_, _)),
-      "vectors_retrained" -> (vectorsRetrained(_, _)),
-      "vectors_rebuilt" -> (vectorsRebuilt(_, _)),
-      "vectors_compacted" -> (vectorsCompacted(_, _)),
-      "vectors_curated" -> (vectorsCurated(_, _)))
+      : Seq[(String, (SparkSession, String) => Any)] =
+    fixtures.toSeq.sortBy(!_.isBase).map(f => f.kind -> f.apply _)
 
   /** Build EVERY fixture the declared + bench queries serve from, in a
     * bounded driver-thread pool, so a cold-`/tmp` bench run pays the
@@ -1290,11 +709,10 @@ object QueryIndexes {
     * (graft.dev.StagerStress): fixture dirs are independent,
     * [[built]]'s computeIfAbsent serializes same-key racers, bases are
     * ensured before each variant's compute, and CachedPlans fills are
-    * lazy-outside-the-lock. Per-family ordering (base before variants)
-    * is preserved by the getters themselves. Failures are returned, not
-    * thrown — the timed loop will surface them per-rep with full
-    * attribution; prewarm must never kill a bench that could still
-    * produce a mostly-clean record.
+    * lazy-outside-the-lock. Failures are returned, not thrown — the
+    * timed loop will surface them per-rep with full attribution;
+    * prewarm must never kill a bench that could still produce a
+    * mostly-clean record.
     *
     * The fixture set is [[prewarmFixtures]] — the one registry both
     * this method and the coverage spec iterate.
@@ -1332,21 +750,5 @@ object QueryIndexes {
       ()
     }
     failures.toSeq
-  }
-
-  private def vectorIndex(spark: SparkSession, sfDir: String,
-      kind: String, evenHalf: Boolean): DedupIndex.VectorIndex = {
-    val vecs = tbl(spark, sfDir, "embeddings")
-    val dir = dirFor(sfDir, kind,
-      graft.plans.CachedPlans.dataFingerprint(vecs))
-    built.computeIfAbsent(dir, _ => {
-      val reusable = vectorParamsReusable(spark, dir)
-      if (!reusable)
-        DedupIndex.writeVectors(
-          if (evenHalf) vecs.filter(col("vec_id") % 2 === 0) else vecs,
-          "vec_id", "embedding", dir, planes = 2, dim = 64)
-      java.lang.Boolean.TRUE
-    })
-    loadVectorsMemo(spark, dir)
   }
 }

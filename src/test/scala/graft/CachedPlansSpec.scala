@@ -3,9 +3,10 @@ package graft
 import graft.plans.CachedPlans
 import org.apache.spark.sql.functions._
 
-/** The plan-keyed persist registry: semantically identical plans share
-  * ONE cache entry (no duplicate persist, no duplicate fill job), and
-  * `clear()` releases everything.
+/** The session memo registry: semantically identical plans share ONE
+  * cache entry (no duplicate persist, no duplicate fill job), values and
+  * index loads build once per snapshot, and `clear()` releases
+  * everything.
   */
 class CachedPlansSpec extends SparkSpec {
   import spark.implicits._
@@ -146,6 +147,43 @@ class CachedPlansSpec extends SparkSpec {
     // clear() forgets value memos too — next call rebuilds
     assert(toks() === (0L until 5L) && builds === 4,
       "clear() must evict value memos")
+    CachedPlans.clear()
+  }
+
+  test("loadIndex: one load per session and directory state; clear forgets it") {
+    CachedPlans.clear()
+    val dir = java.nio.file.Files.createTempDirectory("graft-iload")
+    val part = dir.resolve("part-0")
+    java.nio.file.Files.write(part, "v1".getBytes("UTF-8"))
+    var loads = 0
+    def load(s: org.apache.spark.sql.SparkSession): String =
+      CachedPlans.loadIndex(s, dir.toString) {
+        loads += 1
+        new String(java.nio.file.Files.readAllBytes(part), "UTF-8")
+      }
+    // 1. an unchanged directory loads once and returns the same instance
+    val a = load(spark)
+    assert(a === "v1" && loads === 1)
+    assert(load(spark) eq a, "an unchanged directory must not reload")
+    assert(loads === 1)
+    // 2. rewriting one file (new length and mtime) loads again and
+    // returns the new value
+    java.nio.file.Files.write(part, "v2-longer".getBytes("UTF-8"))
+    java.nio.file.Files.setLastModifiedTime(part,
+      java.nio.file.attribute.FileTime.fromMillis(
+        System.currentTimeMillis() + 5000))
+    assert(load(spark) === "v2-longer" && loads === 2,
+      "a rewritten index directory must reload")
+    assert(load(spark) === "v2-longer" && loads === 2)
+    // 3. another session gets its own load of the same directory state
+    val other = spark.newSession()
+    assert(load(other) === "v2-longer" && loads === 3,
+      "a new session must not be served another session's load")
+    assert(load(other) === "v2-longer" && loads === 3)
+    // 4. clear() forgets loads: the next call loads again
+    CachedPlans.clear()
+    assert(load(spark) === "v2-longer" && loads === 4,
+      "clear() must evict index loads")
     CachedPlans.clear()
   }
 

@@ -154,10 +154,17 @@ class DiffEngineSpec extends SparkSpec {
   private def frame(schema: StructType, rows: Seq[Row]): DataFrame =
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
 
+  /** summarize(rowDiff) as a map, after asserting its rows come back
+    * ordered by status.
+    */
   private def rowDiffCounts(l: DataFrame, r: DataFrame, pks: Seq[String])
-      : Map[String, Long] =
-    DiffEngine.summarize(DiffEngine.rowDiff(l, r, pks)).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+      : Map[String, Long] = {
+    val rows = DiffEngine.summarize(DiffEngine.rowDiff(l, r, pks)).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toSeq
+    assert(rows.map(_._1) === rows.map(_._1).sorted,
+      "summarize must return its rows ordered by status")
+    rows.toMap
+  }
 
   private def reportCounts(l: DataFrame, r: DataFrame, pks: Seq[String])
       : Map[String, Long] = {
@@ -308,6 +315,7 @@ class DiffEngineSpec extends SparkSpec {
       Seq(1.0, null))
     def pick(xs: Seq[Any]) = xs(rnd.nextInt(xs.size))
     def row(k: Any) = Row(k, pick(ds), pick(ss), pick(is), pick(as))
+    var statuses = 0
     (1 to 6).foreach { round =>
       val keys = (1 to 40).map(_ =>
         if (rnd.nextInt(10) == 0) null else rnd.nextInt(25).toLong)
@@ -323,9 +331,12 @@ class DiffEngineSpec extends SparkSpec {
       }
       val l = frame(schema, left)
       val r = frame(schema, rnd.shuffle(right))
-      assert(reportCounts(l, r, Seq("k")) === rowDiffCounts(l, r, Seq("k")),
-        s"round $round")
+      val want = rowDiffCounts(l, r, Seq("k"))
+      statuses = statuses.max(want.size)
+      assert(reportCounts(l, r, Seq("k")) === want, s"round $round")
     }
+    // the status-order check in rowDiffCounts saw several rows at once
+    assert(statuses >= 3)
   }
 
   test("layout range partitions follow the cores, not spark.sql.shuffle.partitions") {
