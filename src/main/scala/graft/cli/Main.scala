@@ -33,10 +33,31 @@ import java.time.Instant
   *                                          # iterator (default) or the
   *                                          # ListObjectsV2 paged protocol
   *     [--interactive]                      # prompt for every field instead
+  *
+  * Exit status: 1 when validate reports a mismatch, 0 otherwise.
   */
 object Main {
 
+  /** Runs [[run]]; exits the JVM with its status only when this
+    * invocation creates the Spark session, the same rule that decides
+    * whether `run` stops it. Embedders calling `main` inside a live
+    * session keep their JVM.
+    */
   def main(args: Array[String]): Unit = {
+    val preExisting = liveSession
+    val status = run(args)
+    if (!preExisting) sys.exit(status)
+  }
+
+  private def liveSession: Boolean = SparkSession.getActiveSession
+    .orElse(SparkSession.getDefaultSession).isDefined
+
+  /** One CLI invocation. Returns 1 when a validated table reports a
+    * mismatch, in its row counts or in its digest chunks, and 0
+    * otherwise; a table skipped for lack of a primary key is not a
+    * mismatch. Bad arguments and failed jobs throw.
+    */
+  def run(args: Array[String]): Int = {
     // reference parity: the client's no-flags build prompts for every
     // parameter with a default (main.rs:157-285, inquire). `--interactive`
     // collects the same fields from stdin and then runs the normal flow.
@@ -106,9 +127,8 @@ object Main {
     }.toMap
 
     // only stop a session this invocation created — embedders (and tests)
-    // calling main() inside a live Spark app keep their session
-    val preExisting = SparkSession.getActiveSession
-      .orElse(SparkSession.getDefaultSession).isDefined
+    // calling run() or main() inside a live Spark app keep their session
+    val preExisting = liveSession
     val spark = SparkSession.builder()
       .appName("graft-cdc")
       .withExtensions(new GraftExtensions)
@@ -168,7 +188,7 @@ object Main {
           println(s"[snapshot] $t: $n rows reconstructed")
         }
       }
-      if (!cfg.onlySnapshot) {
+      val mismatch = !cfg.onlySnapshot && {
         // expected side: a parquet state dir (--expected) or a live
         // database (--expected-jdbc, the reference's source-DB validate
         // verb — cdc_operator.rs:254-288) read in parallel on the PK
@@ -190,15 +210,15 @@ object Main {
         // listing to fingerprint — clear() at the boundary covers them
         // (and frees phase-1 cache blocks either way)
         graft.plans.CachedPlans.clear()
-        readExpected.foreach { readSource =>
+        readExpected.exists { readSource =>
           // per-table validations fan out through the bounded pool (each
           // body is its own Spark job); report lines are collected and
           // printed in table order so concurrent runs stay readable
           val report = graft.cdc.TablePool.map(
             specs, cfg.maxConcurrentTables) { s =>
             if (s.primaryKey.isEmpty) {
-              Seq(s"[validate] ${s.name}: SKIPPED (no primary key; " +
-                "row-level validation needs one)")
+              (Seq(s"[validate] ${s.name}: SKIPPED (no primary key; " +
+                "row-level validation needs one)"), false)
             } else {
               val source = readSource(s)
               // target side mirrors where the snapshot landed
@@ -216,7 +236,7 @@ object Main {
               // is read once
               val badChunks = ValidateJob.validateByDigest(
                 source, target, s, cfg.chunkSize, cfg.startChunk)
-              Seq(
+              (Seq(
                 s"[validate] ${s.name}: " +
                   (if (rep.ok) s"OK (${rep.matched} rows)"
                    else s"MISMATCH only_left=${rep.onlyLeft} " +
@@ -225,12 +245,15 @@ object Main {
                   (if (badChunks.isEmpty) s"OK (chunk size ${cfg.chunkSize}" +
                     (if (cfg.startChunk > 0) s", from chunk ${cfg.startChunk}"
                      else "") + ")"
-                   else s"MISMATCH at chunk ids ${badChunks.mkString(", ")}"))
+                   else s"MISMATCH at chunk ids ${badChunks.mkString(", ")}")),
+                !rep.ok || badChunks.nonEmpty)
             }
           }
-          report.flatten.foreach(println)
+          report.flatMap(_._1).foreach(println)
+          report.exists(_._2)
         }
       }
+      if (mismatch) 1 else 0
     } finally if (!preExisting) spark.stop()
   }
 

@@ -228,11 +228,13 @@ object DiffEngine {
     * cover columns in NAME order, so two sides with different physical
     * column layouts (source parquet vs reducer output) still compare.
     *
-    * PERSIST is load-bearing for [[chunkDigest]]: its counts pre-job and
-    * final aggregation are two separate executions, and RangePartitioner
-    * re-SAMPLES boundaries per execution (seeded by rdd.id), so without
-    * the cache they would see different layouts and apply the offsets to
-    * the wrong partitions. Registry routing shares one fill between the
+    * PERSIST is load-bearing for [[chunkDigest]]: its per-partition counts
+    * pre-job and its per-partition digest fold are two separate
+    * executions over this layout, and RangePartitioner re-SAMPLES
+    * boundaries per execution (seeded by rdd.id), so without the cache
+    * they would see different layouts and apply the offsets to the wrong
+    * partitions. Both read the persisted partitions in place, with no
+    * exchange of rows. Registry routing shares one fill between the
     * callers reading the same side: [[rowStatus]] then [[chunkDigest]] in
     * a validate, or several digests of one side.
     *
@@ -288,47 +290,95 @@ object DiffEngine {
     diff.groupBy(StatusCol).agg(count(lit(1)).as("n"))
       .coalesce(1).sortWithinPartitions(StatusCol)
 
-  /** PK-ordered chunk digests (reference-parity mode; resumable compare).
+  /** PK-ordered chunk digests (reference-parity mode; resumable compare):
+    * `(chunk_id, n_rows, digest)`, digest = md5 of the chunk's `_rh`
+    * values joined by "|" in global row order.
     *
     * Global row numbers WITHOUT a global sort: the side's [[rowLayout]]
     * is range-partitioned on the PK (plus the row hash as a deterministic
     * tie-break for duplicate PKs) and sorted within partitions; partition-
     * local indices come from its `_mid`, lifted to global row numbers
-    * with per-partition count offsets collected in one light pre-job.
-    * Both jobs read the one persisted layout (see [[rowLayout]] for why
-    * that is load-bearing and for the staleness contract); long-lived
-    * sessions reclaim it via `CachedPlans.clear()` or LRU.
+    * with per-partition counts collected in one narrow pre-job. The
+    * digests are then folded inside the layout's partitions: a chunk
+    * whose rows all lie in one partition leaves it as one finished row,
+    * and a chunk that partition boundaries cut leaves each of its
+    * partitions as that partition's "|"-joined text, merged in partition
+    * order after the one `chunk_id` exchange. So the shuffle is
+    * O(chunks + partitions), not O(rows). Both jobs read the one
+    * persisted layout (see [[rowLayout]] for why that is load-bearing and
+    * for the staleness contract); long-lived sessions reclaim it via
+    * `CachedPlans.clear()` or LRU.
     */
   def chunkDigest(df: DataFrame, pks: Seq[String], chunkSize: Int)
       : DataFrame = {
     require(chunkSize > 0, s"chunkDigest: chunkSize must be > 0, got $chunkSize")
     val sorted = rowLayout(df, pks)
-    val localIdxBits = 33 // monotonically_increasing_id: pid << 33 | local index
-    val pidOf = shiftright(col("_mid"), localIdxBits)
-    val counts = sorted.groupBy(pidOf.as("_pid"))
-      .agg(count(lit(1)).as("_n"))
-      .collect() // one row per shuffle partition — tiny
-      .map(r => (r.getLong(0), r.getLong(1)))
-      .sortBy(_._1)
-    val offsets = counts.scanLeft((0L, 0L)) { case ((_, acc), (pid, n)) =>
-      (pid, acc + n)
-    }.init.zip(counts).map { case ((_, off), (pid, _)) => (pid, off) }
-    val offsetExpr =
-      if (offsets.isEmpty) lit(0L)
-      else element_at(
-        map(offsets.flatMap { case (p, o) => Seq(lit(p), lit(o)) }: _*), pidOf)
-    val localIdx = col("_mid").bitwiseAND(lit((1L << localIdxBits) - 1))
-    sorted
-      .withColumn("_rn", offsetExpr + localIdx + lit(1L))
-      .withColumn("chunk_id", ((col("_rn") - 1) / chunkSize).cast(LongType))
+    val spark = sorted.sparkSession
+    import spark.implicits._
+    val counts = sorted.select(col("_mid")).as[Long].mapPartitions { mids =>
+      if (!mids.hasNext) Iterator.empty
+      else Iterator((mids.next() >>> LocalIdxBits, 1L + mids.size))
+    }.collect().sortBy(_._1) // one row per non-empty layout partition
+    // pid -> the 0-based global row numbers [first, end) it holds
+    val starts = counts.scanLeft(0L)(_ + _._2)
+    val spans = counts.indices
+      .map(i => counts(i)._1 -> (starts(i), starts(i + 1))).toMap
+    val total = starts.last
+    sorted.select(col("_mid"), col("_rh")).as[(Long, String)]
+      .mapPartitions(rows => foldChunks(rows, spans, total, chunkSize))
+      .toDF("chunk_id", "_pid", "_n", "_digest", "_part")
       .groupBy(col("chunk_id"))
       .agg(
-        count(lit(1)).as("n_rows"),
-        // deterministic order inside the digest: sort collected (rn, hash)
-        // pairs, then fold — portable to any engine's ordered string_agg
-        md5(array_join(transform(
-          array_sort(collect_list(struct(col("_rn"), col("_rh")))),
-          s => s.getField("_rh")), "|")).as("digest"))
+        sum(col("_n")).as("n_rows"),
+        coalesce(max(col("_digest")), md5(
+          expr("listagg(_part, '|') WITHIN GROUP (ORDER BY _pid)")))
+          .as("digest"))
+  }
+
+  // monotonically_increasing_id: pid << 33 | local index
+  private val LocalIdxBits = 33
+  private val LocalIdxMask = (1L << LocalIdxBits) - 1
+
+  /** One layout partition's share of [[chunkDigest]]: rows `(_mid, _rh)`
+    * in layout order in, one row `(chunk_id, pid, n, digest, part)` per
+    * chunk out. A chunk whose rows `[c·size, min((c+1)·size, total))`
+    * (0-based) all lie in this partition gets its md5 digest; a chunk
+    * that reaches past the partition gets its "|"-joined part instead.
+    */
+  private def foldChunks(rows: Iterator[(Long, String)],
+      spans: Map[Long, (Long, Long)], total: Long, chunkSize: Int)
+      : Iterator[(Long, Long, Long, String, String)] = {
+    val in = rows.buffered
+    if (!in.hasNext) return Iterator.empty
+    val pid = in.head._1 >>> LocalIdxBits
+    val (first, end) = spans(pid)
+    def chunkOf(mid: Long) = (first + (mid & LocalIdxMask)) / chunkSize
+    new Iterator[(Long, Long, Long, String, String)] {
+      def hasNext: Boolean = in.hasNext
+      def next(): (Long, Long, Long, String, String) = {
+        val c = chunkOf(in.head._1)
+        val whole = c * chunkSize >= first &&
+          math.min((c + 1) * chunkSize, total) <= end
+        val md = java.security.MessageDigest.getInstance("MD5")
+        val part = new java.lang.StringBuilder
+        var n = 0L
+        while (in.hasNext && chunkOf(in.head._1) == c) {
+          val rh = in.next()._2
+          if (whole) {
+            if (n > 0) md.update('|'.toByte)
+            md.update(rh.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          } else {
+            if (n > 0) part.append('|')
+            part.append(rh)
+          }
+          n += 1
+        }
+        if (whole)
+          (c, pid, n, org.apache.commons.codec.binary.Hex.encodeHexString(
+            md.digest()), null)
+        else (c, pid, n, null, part.toString)
+      }
+    }
   }
 
   /** Order-independent bucketed digests: bucket = first `hexChars` hex

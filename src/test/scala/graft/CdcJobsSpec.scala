@@ -318,4 +318,24 @@ class CdcJobsSpec extends SparkSpec {
     spark.sql("DROP TABLE IF EXISTS " +
       SnapshotJob.snapshotTableName("items", s"$base/out_bucketed/items"))
   }
+
+  test("CLI run returns 1 on a validate mismatch and 0 on a clean pair") {
+    val base = Files.createTempDirectory("clistatus").toString
+    val rows = (1L to 40L).map(i => (i, s"v$i"))
+    // two table dirs; `bare` gets no --pk, so validate skips it
+    Seq("items", "bare").foreach(t => Files.createDirectories(
+      java.nio.file.Paths.get(s"$base/db/$t")))
+    rows.toDF("id", "v").write.parquet(s"$base/out/items")
+    rows.toDF("id", "v").write.parquet(s"$base/clean/items")
+    rows.map { case (i, v) => (i, if (i == 33L) "drift" else v) }
+      .toDF("id", "v").write.parquet(s"$base/drifted/items")
+    def args(expected: String) = Array("--base-dir", s"$base/db",
+      "--pk", "items=id", "--out", s"$base/out", "--chunk-size", "10",
+      "--only-datadiff", "--expected", s"$base/$expected")
+    assert(graft.cli.Main.run(args("clean")) === 0)
+    assert(graft.cli.Main.run(args("drifted")) === 1)
+    // main returns to a caller that already runs a session
+    graft.cli.Main.main(args("drifted"))
+    assert(!spark.sparkContext.isStopped)
+  }
 }

@@ -84,6 +84,111 @@ class DiffEngineSpec extends SparkSpec {
           s => s.getField("_rh")), "|")).as("digest"))
   }
 
+  /** chunkDigest's rows equal naiveDigest's, digest for digest. */
+  private def assertDigestExact(a: DataFrame, pk: String, chunkSize: Int)
+      : Unit = {
+    val fast = DiffEngine.chunkDigest(a, Seq(pk), chunkSize).collect().toSet
+    assert(fast === naiveDigest(a, pk, chunkSize).collect().toSet,
+      s"chunk size $chunkSize")
+    assert(fast.size === math.ceil(a.count().toDouble / chunkSize).toLong)
+  }
+
+  /** Row count of each of the side's layout partitions, in pid order. */
+  private def layoutSizes(a: DataFrame, pk: String): Seq[Long] =
+    DiffEngine.rowLayout(a, Seq(pk)).rdd
+      .mapPartitions(rows => Iterator(rows.size.toLong)).collect().toSeq
+
+  private def tenThousand = spark.range(0, 10000)
+    .select(($"id" % 4999).as("k"), concat(lit("p"), $"id" % 7).as("v"))
+
+  test("chunk digest folds a chunk that spans three or more partitions") {
+    val a = tenThousand
+    val sizes = layoutSizes(a, "k")
+    assert(sizes.count(_ > 0) >= 3, s"layout sizes $sizes")
+    // one chunk holding every row, and a chunk wider than any partition
+    // with a short last chunk behind it
+    assertDigestExact(a, "k", 10000)
+    assert(sizes.max < 4001, s"layout sizes $sizes")
+    assertDigestExact(a, "k", 4001)
+  }
+
+  test("chunk digest at chunk size 1 is one row hash per chunk") {
+    assertDigestExact(tenThousand.limit(2000), "k", 1)
+  }
+
+  test("chunk digest where a chunk boundary is a partition boundary") {
+    val a = tenThousand
+    val sizes = layoutSizes(a, "k")
+    assert(sizes.length >= 2 && sizes.take(2).forall(_ > 0),
+      s"layout sizes $sizes")
+    // chunk 0 is exactly partition 0
+    assertDigestExact(a, "k", sizes.head.toInt)
+  }
+
+  test("chunk digest over a layout with empty partitions") {
+    // one PK everywhere: rows tie-break on _rh alone, and two distinct
+    // row hashes fill at most two of the range partitions
+    val dup = spark.range(0, 3000)
+      .select(lit(7L).as("k"), concat(lit("p"), $"id" % 2).as("v"))
+    val sizes = layoutSizes(dup, "k")
+    assert(sizes.contains(0L), s"layout sizes $sizes")
+    assertDigestExact(dup, "k", 700)
+  }
+
+  test("chunk digest of an empty side is empty") {
+    assertDigestExact(tenThousand.filter(lit(false)), "k", 300)
+  }
+
+  test("chunk digest over a layout with more partitions than cores") {
+    graft.plans.CachedPlans.clear()
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "16k")
+    try {
+      val a = spark.range(0, 20000)
+        .select(($"id" % 4999).as("k"), concat(lit("p"), $"id" % 7).as("v"))
+      val parts = layoutSizes(a, "k").length
+      assert(parts > spark.sparkContext.defaultParallelism, s"$parts partitions")
+      assertDigestExact(a, "k", 700)
+    } finally {
+      prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      graft.plans.CachedPlans.clear()
+    }
+  }
+
+  test("chunk digest shuffles one record per chunk plus the cut chunks") {
+    graft.plans.CachedPlans.clear()
+    val a = spark.range(0, 200000)
+      .select(($"id" % 997).as("k"), concat(lit("p"), $"id" % 3).as("v"))
+    val written = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(
+          end: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(end.taskMetrics).foreach(m =>
+          written.addAndGet(m.shuffleWriteMetrics.recordsWritten))
+    }
+    def drained(): Long = {
+      org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+      written.getAndSet(0L)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      drained()
+      val parts = layoutSizes(a, "k").length // fills the layout
+      // the listener sees the fill's range exchange ship every row
+      assert(drained() >= 200000L)
+      val chunks = math.ceil(200000.0 / 300).toLong
+      assert(DiffEngine.chunkDigest(a, Seq("k"), 300).collect().length
+        === chunks)
+      val digest = drained()
+      assert(digest > 0L && digest <= chunks + 2L * parts,
+        s"$digest shuffle records for $chunks chunks over $parts partitions")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      graft.plans.CachedPlans.clear()
+    }
+  }
+
   test("chunk digest rejects non-positive chunk size") {
     intercept[IllegalArgumentException] {
       DiffEngine.chunkDigest(sample, Seq("id"), 0)

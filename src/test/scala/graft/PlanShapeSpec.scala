@@ -128,6 +128,16 @@ class PlanShapeSpec extends SparkSpec {
     forbidSinglePartition(
       DiffEngine.chunkDigest(t, Seq("id"), 100), "chunkDigest")
     forbidLoops(DiffEngine.chunkDigest(t, Seq("id"), 100), "chunkDigest")
+    // digests are folded inside the persisted layout's partitions: the
+    // plan reads the cache, and the only exchange is the per-chunk merge
+    val digest = DiffEngine.chunkDigest(t, Seq("id"), 100)
+    assert(plan(digest).collect {
+      case m: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => m
+    }.nonEmpty, "chunkDigest does not read the cached layout")
+    val ex = shuffles(digest)
+    assert(ex.length === 1, s"expected 1 shuffle, got ${ex.length}")
+    assert(ex.head.outputPartitioning.toString.contains("chunk_id"),
+      s"shuffle must key on chunk_id: ${ex.head.outputPartitioning}")
   }
 
   test("pipeline_e2e capstone: keyed joins only, no funnels, scans bounded") {
