@@ -266,34 +266,32 @@ object ValidateJob {
   /** Row-exact validation of source vs reconstructed state for one table
     * (the engine-native replacement for delegated pgdatadiff): the
     * per-status counts of `DiffEngine.rowDiff`, computed by
-    * `DiffEngine.rowStatus` from each side's cached narrow layout — pk
-    * columns and the exact payload hash `_xh`, never the payload. `_xh`
-    * hashes the values themselves, so a difference past the 6th decimal,
-    * which the digests' canonical `_rh` rounds away, still counts as a
-    * mismatch. A following [[validateByDigest]] on the same
-    * `source`/`target` digests from the same cache entries, so the pair
-    * reads each side once.
+    * `DiffEngine.statusCounts` over the table's cached layout of both
+    * sides — pk columns and the exact payload hash `_xh`, never the
+    * payload, counted in place with no join shuffle. `_xh` hashes the
+    * values themselves, so a difference past the 6th decimal, which the
+    * digests' canonical `_rh` rounds away, still counts as a mismatch. A
+    * following [[validateByDigest]] on the same `source`/`target` digests
+    * from the same cache entry, so the pair reads each side once.
     *
-    * Staleness is `chunkDigest`'s contract: file-backed sides re-key on
-    * their listing + length + mtime; a non-file side (JDBC) needs
+    * Staleness is the layout's contract, and its unit is the PAIR:
+    * rewriting a file of either side re-keys the entry, and the next
+    * call re-reads both sides; a non-file side (JDBC) needs
     * `CachedPlans.clear()` at a mutation boundary, as the CLI does
     * between snapshot and validate.
     */
   def validateTable(source: DataFrame, target: DataFrame, table: TableSpec)
       : TableReport = {
-    // per-status counts; no order needed, unlike `DiffEngine.summarize`
-    val counts = DiffEngine.rowStatus(source, target, table.primaryKey)
-      .groupBy(DiffEngine.StatusCol).count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    TableReport(table.name,
-      counts.getOrElse("match", 0L), counts.getOrElse("only_left", 0L),
-      counts.getOrElse("only_right", 0L), counts.getOrElse("mismatch", 0L))
+    val r = DiffEngine.statusCounts(source, target, table.primaryKey).head()
+    TableReport(table.name, r.getAs[Long]("match"),
+      r.getAs[Long]("only_left"), r.getAs[Long]("only_right"),
+      r.getAs[Long]("mismatch"))
   }
 
   /** Digest-mode validation: compares per-chunk digests (chunkSize rows,
     * PK-ordered) and returns the ids of mismatching chunks — pgdatadiff's
     * chunked early-exit economics (D2), distributed. Reads the same cached
-    * per-side layouts as [[validateTable]], under the same staleness
+    * layout of the pair as [[validateTable]], under the same staleness
     * contract.
     *
     * `startChunk` resumes a previously-interrupted validation (the
@@ -307,8 +305,8 @@ object ValidateJob {
     import org.apache.spark.sql.functions.col
     def resume(df: DataFrame) =
       if (startChunk <= 0) df else df.filter(col("chunk_id") >= startChunk)
-    val l = resume(DiffEngine.chunkDigest(source, table.primaryKey, chunkSize))
-    val r = resume(DiffEngine.chunkDigest(target, table.primaryKey, chunkSize))
+    val Seq(l, r) = DiffEngine.chunkDigests(Seq(source, target),
+      table.primaryKey, chunkSize).map(resume)
     DiffEngine.compareDigests(l, r, "chunk_id")
       .filter(!col("ok"))
       .select("chunk_id").collect().map(_.getLong(0)).toSeq.sorted

@@ -232,8 +232,8 @@ object Main {
               // chunked-digest compare (the reference's pgdatadiff chunk
               // economics): report mismatching chunk ids at --chunk-size,
               // resuming at --start-position. It digests from the cached
-              // per-side layouts validateTable just filled, so each side
-              // is read once
+              // layout of the pair validateTable just filled, so each
+              // side is read once
               val badChunks = ValidateJob.validateByDigest(
                 source, target, s, cfg.chunkSize, cfg.startChunk)
               (Seq(

@@ -1,11 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.catalyst.expressions.{EqualNullSafe, XxHash64}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.catalyst.expressions.{EqualNullSafe, EqualTo, XxHash64}
+import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{Column, DataFrame}
+
+import java.nio.charset.StandardCharsets
 
 /** Table-vs-table validation, the Spark-native replacement for the
   * reference's delegated `rust-pgdatadiff` diff (call site
@@ -15,10 +19,11 @@ import org.apache.spark.sql.{Column, DataFrame}
   *
   * Four operations, chosen by what the caller needs:
   *
-  *  - `rowStatus`: per-PK status (match, mismatch, only_left,
-  *    only_right) from the sides' cached [[rowLayout]]s — pk columns and
-  *    a 16-byte exact payload hash per row are all that is joined, never
-  *    the payload. Counts equal `summarize(rowDiff)` exactly.
+  *  - `statusCounts`: how many rows match, mismatch or are only_left /
+  *    only_right, counted over the pair's cached [[layout]] — pk columns
+  *    and a 16-byte exact payload hash per row, never the payload, and
+  *    no join: both sides share one PK range partitioning. Counts equal
+  *    `summarize(rowDiff)` exactly.
   *  - `rowDiff`: full-outer join on the PK with null-safe (`<=>`) payload
   *    comparison. Exact, row-level, reports WHICH columns mismatch — the
   *    per-column drill-down; it ships whole payloads through its shuffle.
@@ -30,9 +35,10 @@ import org.apache.spark.sql.{Column, DataFrame}
   *    100 TB path: digest = sum of per-row hashes per bucket, fully
   *    map-side aggregatable.
   *
-  * `rowStatus` and `chunkDigest` read a side through ONE registry-cached
-  * layout, `(pk…, _rh, _xh, _mid)`: a validate that asks for both reads
-  * each side's files once. The two hashes answer different questions:
+  * `statusCounts` and `chunkDigests` read a table through ONE
+  * registry-cached [[layout]] of both sides, `(pk…, _side, _rh, _xh)`: a
+  * validate that asks for both reads each side's files once and shuffles
+  * its rows once. The two hashes answer different questions:
   *  - `_rh` is the CANONICAL row hash the digests are made of: every
   *    value is rendered to text first (`canonicalColumn`) — floats
   *    rounded to 6 decimals, timestamps as epoch micros, explicit NULL
@@ -132,60 +138,56 @@ object DiffEngine {
         s"${left.columns.toSet -- right.columns.toSet}, only-right=" +
         s"${right.columns.toSet -- left.columns.toSet}")
 
-  /** Row statuses without the payload: pk columns + diff_status, with the
-    * same rows and statuses as [[rowDiff]] (duplicate and NULL PKs
-    * included — the join is the same full-outer join on the PK), but
-    * joined over the sides' cached [[rowLayout]]s, comparing `_xh`
-    * instead of the payload. A later [[chunkDigest]] of the same side
-    * reads the same cache entry, so the two read each side once.
-    *
-    * Columns whose types differ between the sides are cast to the type
-    * `rowDiff`'s `<=>` compares them at (int vs bigint: bigint), before
-    * hashing; pairs `<=>` cannot compare raise its analysis error. Such a
-    * side's layout is its own cache entry, so its digest reads it again.
+  /** Per-status row counts of `rowDiff(left, right, pks)` as one row
+    * `(match, only_left, only_right, mismatch)`, counted over the pair's
+    * cached [[layout]] without moving a row: the layout is range-
+    * partitioned on the PK alone, so every key's rows from both sides
+    * already share a partition and the two grouping steps below need no
+    * exchange. Per key, with `nl`/`nr` each side's rows per exact payload
+    * hash `_xh`: `match = Σ nl·nr` (the join's equal pairs),
+    * `mismatch = Σnl·Σnr − match`, and a key one side lacks is the other
+    * side's `only_*`. A key with a NULL component never joins, so each of
+    * its rows counts to its own side's `only_*`. Only the one partial
+    * count per partition crosses the final exchange.
     */
-  def rowStatus(left: DataFrame, right: DataFrame, pks: Seq[String])
+  def statusCounts(left: DataFrame, right: DataFrame, pks: Seq[String])
       : DataFrame = {
-    requireSameColumns("rowStatus", left, right)
-    val payloadCols = left.columns.filterNot(pks.contains).toSeq
-    val compared = comparedTypes(left, right, payloadCols)
-    def side(df: DataFrame, as: String) =
-      rowLayout(alignTypes(df, compared), pks)
-        .select(pks.map(col) :+ col("_xh").as(as): _*)
-    // _xh is never NULL, so a NULL one marks the side without the key
-    val status = when(col("_lx").isNull, lit("only_right"))
-      .when(col("_rx").isNull, lit("only_left"))
-      .when(col("_lx") <=> col("_rx"), lit("match"))
-      .otherwise(lit("mismatch"))
-    side(left, "_lx").join(side(right, "_rx"), pks, "full_outer")
-      .select(pks.map(col) :+ status.as(StatusCol): _*)
+    val isLeft = col(SideCol) === 0
+    val perHash = layout(Seq(left, right), pks)
+      .groupBy(pks.map(col) :+ col("_xh"): _*)
+      .agg(count(when(isLeft, 1)).as("nl"), count(when(!isLeft, 1)).as("nr"))
+    val perKey = perHash.groupBy(pks.map(col): _*).agg(sum("nl").as("l"),
+      sum("nr").as("r"), sum(col("nl") * col("nr")).as("m"))
+    val alone = pks.map(col(_).isNull).reduce(_ || _)
+    def total(c: Column) = coalesce(sum(c), lit(0L))
+    perKey.agg(
+      total(when(!alone, col("m"))).as("match"),
+      total(when(alone || col("r") === 0, col("l"))).as("only_left"),
+      total(when(alone || col("l") === 0, col("r"))).as("only_right"),
+      total(when(!alone, col("l") * col("r") - col("m"))).as("mismatch"))
   }
 
-  /** The struct type `rowDiff` compares both payload structs at — the
-    * common type Spark's analyzer coerces `<=>`'s operands to. Analysis
-    * only, no job; an incomparable pair throws rowDiff's own error.
+  /** The type each column is compared at by `rowDiff(left, right, pks)`:
+    * a PK column at its join condition's coerced type (int vs bigint:
+    * bigint), a payload column at the field type of the struct `<=>`
+    * compares. Read by analysing that join (no job); a pair `rowDiff`
+    * cannot compare raises its own analysis error here.
     */
   private def comparedTypes(left: DataFrame, right: DataFrame,
-      payloadCols: Seq[String]): StructType =
-    left.select(struct(payloadCols.map(col): _*).as("_l"))
-      .crossJoin(right.select(struct(payloadCols.map(col): _*).as("_r")))
-      .select((col("_l") <=> col("_r")).as("_eq"))
-      .queryExecution.analyzed.expressions
+      pks: Seq[String]): Map[String, DataType] = {
+    val payloadCols = left.columns.filterNot(pks.contains).toSeq
+    def side(df: DataFrame, as: String) =
+      df.select(pks.map(col) :+ struct(payloadCols.map(col): _*).as(as): _*)
+    val plan = side(left, "_l").join(side(right, "_r"), pks, "full_outer")
+      .select((col("_l") <=> col("_r")).as("_eq")).queryExecution.analyzed
+    // the USING join's condition is one EqualTo per key, in pk order
+    val keyTypes = plan.collectFirst { case j: Join => j.condition }.flatten
+      .toSeq.flatMap(_.collect { case e: EqualTo => e.left.dataType })
+    val payloadTypes = plan.expressions
       .flatMap(_.collect { case e: EqualNullSafe => e.left.dataType })
-      .collectFirst { case st: StructType => st }
-      .getOrElse(StructType(Nil))
-
-  /** `df` with each column of `compared` cast to that type where its own
-    * differs — `df` itself (same plan, same cache entry) when none does.
-    */
-  private def alignTypes(df: DataFrame, compared: StructType): DataFrame = {
-    val casts = compared.fields.filter(f => df.schema.find(_.name == f.name)
-      .exists(g => !DataType.equalsStructurally(g.dataType, f.dataType,
-        ignoreNullability = true)))
-      .map(f => f.name -> f.dataType).toMap
-    if (casts.isEmpty) df
-    else df.select(df.columns.toSeq.map(c =>
-      casts.get(c).fold(col(c))(t => col(c).cast(t).as(c))): _*)
+      .collectFirst { case st: StructType => st.fields.toSeq }
+      .getOrElse(Nil).map(f => f.name -> f.dataType)
+    (pks.zip(keyTypes) ++ payloadTypes).toMap
   }
 
   /** Atoms [[exactHash]] folds for one value. Spark's hash functions skip
@@ -200,61 +202,90 @@ object DiffEngine {
         Seq(size(c), transform(c, e => struct(exactAtoms(e, et): _*)))
       case st: StructType =>
         st.fields.toSeq.flatMap(f => exactAtoms(c.getField(f.name), f.dataType))
-      // `<=>` cannot compare maps (rowStatus raises its error first), but
-      // chunkDigest's layout must still build: hash the entries in order
+      // `<=>` cannot compare maps (statusCounts raises its error first),
+      // but a one-side layout must still build: hash the entries in order
       case MapType(kt, vt, _) =>
         exactAtoms(map_entries(c), ArrayType(StructType(Seq(
           StructField("key", kt), StructField("value", vt)))))
       case _ => Seq(c)
     })
 
-  /** Exact 128-bit hash of `cols` in the given order, as 16 bytes: two
-    * xxhash64 folds of the same atoms under different seeds. Unlike
-    * [[rowHash]] nothing is rendered or rounded, so it is equal exactly
-    * when `<=>` is (up to a 2^-128 collision).
+  /** Exact 128-bit hash of `cols` (each a value and its type) in the given
+    * order, as 16 bytes: two xxhash64 folds of the same atoms under
+    * different seeds. Unlike [[rowHash]] nothing is rendered or rounded,
+    * so it is equal exactly when `<=>` is (up to a 2^-128 collision).
     */
-  private def exactHash(df: DataFrame, cols: Seq[String]): Column = {
+  private def exactHash(cols: Seq[(Column, DataType)]): Column = {
     val atoms = ColumnBridge.expression(lit(cols.size)) +:
-      cols.flatMap(c => exactAtoms(col(c), df.schema(c).dataType))
+      cols.flatMap { case (c, dt) => exactAtoms(c, dt) }
         .map(ColumnBridge.expression)
     ColumnBridge.column(graft.plans.LongPairBytes(
       XxHash64(atoms, 0x5eed1L), XxHash64(atoms, 0x5eed2L)))
   }
 
-  /** One side's narrow layout, `(pk…, _rh, _xh, _mid)`, persisted once per
-    * (session, plan, input snapshot) through `CachedPlans.cached`:
-    * range-partitioned on `(pk…, _rh)` and sorted within partitions, with
-    * `_mid` the `monotonically_increasing_id` of the sorted row. Hashes
-    * cover columns in NAME order, so two sides with different physical
-    * column layouts (source parquet vs reducer output) still compare.
+  /** Which side of a [[layout]] a row comes from: its index in `sides`. */
+  private val SideCol = "_side"
+
+  /** The narrow layout of one side or of a (left, right) pair,
+    * `(pk…, _side, _rh, _xh)`, persisted once per (session, plan, input
+    * snapshot) through `CachedPlans.cached`:
+    *  - `_rh` is the side's canonical row hash ([[rowHash]] over its own
+    *    columns in NAME order, so physical column order never matters),
+    *    stored as its 16 md5 bytes. Byte order is hex order, so ranks,
+    *    chunk ids and digests are those of the hex string;
+    *  - `_xh` is the exact payload hash. For a pair, the PK and payload
+    *    columns are first cast to the types `rowDiff` compares them at
+    *    ([[comparedTypes]]), so both sides' keys and hashes agree exactly
+    *    when the join's `=` and `<=>` do.
     *
-    * PERSIST is load-bearing for [[chunkDigest]]: its per-partition counts
-    * pre-job and its per-partition digest fold are two separate
+    * The sides are unioned and range-partitioned ONCE on the PK alone
+    * (one sampling job, [[layoutPartitions]] partitions), so partition i
+    * holds the same key range for every side, and sorted within
+    * partitions on `(_side, pk…, _rh)`: each side's rows lie in digest
+    * order. [[statusCounts]] groups on it in place; [[chunkDigests]]
+    * folds each side's rows in place.
+    *
+    * PERSIST is load-bearing for [[chunkDigests]]: its per-partition
+    * counts pre-job and its per-partition digest fold are separate
     * executions over this layout, and RangePartitioner re-SAMPLES
     * boundaries per execution (seeded by rdd.id), so without the cache
     * they would see different layouts and apply the offsets to the wrong
-    * partitions. Both read the persisted partitions in place, with no
-    * exchange of rows. Registry routing shares one fill between the
-    * callers reading the same side: [[rowStatus]] then [[chunkDigest]] in
-    * a validate, or several digests of one side.
+    * partitions.
     *
-    * Staleness contract: the registry key carries the input snapshot
-    * (file listing + length + mtime), so a re-run over rewritten files
-    * misses the stale entry and reads current contents — no manual step.
-    * Only NON-FILE sides (JDBC, in-memory — empty listing, pure plan
-    * keying) need `CachedPlans.clear()` at a mutation boundary; the CLI
-    * keeps one at snapshot→validate because its sides may be JDBC.
+    * Staleness contract: the registry key carries the input snapshot of
+    * every side (file listing + length + mtime), so a re-run over a
+    * rewritten file of EITHER side misses the stale entry and re-fills
+    * the whole pair from current contents — no manual step. Only
+    * NON-FILE sides (JDBC, in-memory — empty listing, pure plan keying)
+    * need `CachedPlans.clear()` at a mutation boundary; the CLI keeps one
+    * at snapshot→validate because its sides may be JDBC.
     */
-  private[graft] def rowLayout(df: DataFrame, pks: Seq[String]): DataFrame = {
-    val dataCols = df.columns.sorted.toSeq
-    val narrow = df.select(pks.map(col) ++ Seq(
-      rowHash(df, dataCols).as("_rh"),
-      exactHash(df, dataCols.filterNot(pks.contains)).as("_xh")): _*)
-    val sortCols = pks.map(col) :+ col("_rh")
+  private[graft] def layout(sides: Seq[DataFrame], pks: Seq[String])
+      : DataFrame = {
+    require(pks.nonEmpty, "layout needs a primary key to range-partition on")
+    require(sides.size == 1 || sides.size == 2,
+      s"layout of one side or a pair, got ${sides.size} sides")
+    val types = sides match {
+      case Seq(l, r) =>
+        requireSameColumns("validate", l, r)
+        comparedTypes(l, r, pks)
+      case _ => Map.empty[String, DataType]
+    }
+    val narrow = sides.zipWithIndex.map { case (df, side) =>
+      def aligned(c: String): (Column, DataType) = {
+        val own = df.schema(c).dataType
+        types.get(c).filterNot(t => DataType.equalsStructurally(own, t,
+          ignoreNullability = true)).fold(col(c) -> own)(t => col(c).cast(t) -> t)
+      }
+      val dataCols = df.columns.sorted.toSeq
+      df.select(pks.map(k => aligned(k)._1.as(k)) ++ Seq(
+        lit(side).as(SideCol),
+        unhex(rowHash(df, dataCols)).as("_rh"),
+        exactHash(dataCols.filterNot(pks.contains).map(aligned)).as("_xh")): _*)
+    }.reduce(_ unionByName _)
     graft.plans.CachedPlans.cached(narrow
-      .repartitionByRange(layoutPartitions(narrow), sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-      .withColumn("_mid", monotonically_increasing_id()))
+      .repartitionByRange(layoutPartitions(narrow), pks.map(col): _*)
+      .sortWithinPartitions((col(SideCol) +: pks.map(col)) :+ col("_rh"): _*))
   }
 
   /** Range partitions of a layout: one per core, and more only once the
@@ -290,93 +321,114 @@ object DiffEngine {
     diff.groupBy(StatusCol).agg(count(lit(1)).as("n"))
       .coalesce(1).sortWithinPartitions(StatusCol)
 
-  /** PK-ordered chunk digests (reference-parity mode; resumable compare):
-    * `(chunk_id, n_rows, digest)`, digest = md5 of the chunk's `_rh`
-    * values joined by "|" in global row order.
+  /** PK-ordered chunk digests of one side (reference-parity mode;
+    * resumable compare): `(chunk_id, n_rows, digest)`, digest = md5 of the
+    * chunk's hex `_rh` values joined by "|" in global `(pk…, _rh)` order.
+    * The one-side case of [[chunkDigests]].
+    */
+  def chunkDigest(df: DataFrame, pks: Seq[String], chunkSize: Int)
+      : DataFrame = chunkDigests(Seq(df), pks, chunkSize).head
+
+  /** [[chunkDigest]] of each of `sides`, all read from their one
+    * [[layout]]: a pair's digests come from the same cache entry as its
+    * [[statusCounts]].
     *
-    * Global row numbers WITHOUT a global sort: the side's [[rowLayout]]
-    * is range-partitioned on the PK (plus the row hash as a deterministic
-    * tie-break for duplicate PKs) and sorted within partitions; partition-
-    * local indices come from its `_mid`, lifted to global row numbers
-    * with per-partition counts collected in one narrow pre-job. The
-    * digests are then folded inside the layout's partitions: a chunk
+    * Global row numbers WITHOUT a global sort: the layout is range-
+    * partitioned on the PK and each side's rows are sorted within the
+    * partition, so a side's row numbers are its per-partition counts,
+    * collected for every side in one narrow pre-job, lifted to offsets.
+    * The digests are then folded inside the layout's partitions: a chunk
     * whose rows all lie in one partition leaves it as one finished row,
     * and a chunk that partition boundaries cut leaves each of its
     * partitions as that partition's "|"-joined text, merged in partition
     * order after the one `chunk_id` exchange. So the shuffle is
-    * O(chunks + partitions), not O(rows). Both jobs read the one
-    * persisted layout (see [[rowLayout]] for why that is load-bearing and
-    * for the staleness contract); long-lived sessions reclaim it via
-    * `CachedPlans.clear()` or LRU.
+    * O(chunks + partitions), not O(rows). See [[layout]] for why the
+    * persisted layout is load-bearing and for the staleness contract;
+    * long-lived sessions reclaim it via `CachedPlans.clear()` or LRU.
     */
-  def chunkDigest(df: DataFrame, pks: Seq[String], chunkSize: Int)
-      : DataFrame = {
+  def chunkDigests(sides: Seq[DataFrame], pks: Seq[String], chunkSize: Int)
+      : Seq[DataFrame] = {
     require(chunkSize > 0, s"chunkDigest: chunkSize must be > 0, got $chunkSize")
-    val sorted = rowLayout(df, pks)
+    val sorted = layout(sides, pks)
     val spark = sorted.sparkSession
     import spark.implicits._
-    val counts = sorted.select(col("_mid")).as[Long].mapPartitions { mids =>
-      if (!mids.hasNext) Iterator.empty
-      else Iterator((mids.next() >>> LocalIdxBits, 1L + mids.size))
-    }.collect().sortBy(_._1) // one row per non-empty layout partition
-    // pid -> the 0-based global row numbers [first, end) it holds
-    val starts = counts.scanLeft(0L)(_ + _._2)
-    val spans = counts.indices
-      .map(i => counts(i)._1 -> (starts(i), starts(i + 1))).toMap
-    val total = starts.last
-    sorted.select(col("_mid"), col("_rh")).as[(Long, String)]
-      .mapPartitions(rows => foldChunks(rows, spans, total, chunkSize))
-      .toDF("chunk_id", "_pid", "_n", "_digest", "_part")
-      .groupBy(col("chunk_id"))
-      .agg(
-        sum(col("_n")).as("n_rows"),
-        coalesce(max(col("_digest")), md5(
-          expr("listagg(_part, '|') WITHIN GROUP (ORDER BY _pid)")))
-          .as("digest"))
+    val nSides = sides.size
+    // (side, pid, rows) for every non-empty (side, layout partition)
+    val counts = sorted.select(col(SideCol)).as[Int].mapPartitions { it =>
+      val n = new Array[Long](nSides)
+      it.foreach(s => n(s) += 1)
+      val pid = TaskContext.getPartitionId()
+      n.indices.iterator.filter(n(_) > 0).map(s => (s, pid, n(s)))
+    }.collect()
+    sides.indices.map { side =>
+      val mine = counts.filter(_._1 == side).sortBy(_._2)
+      // pid -> the 0-based global row numbers [first, end) it holds
+      val starts = mine.scanLeft(0L)(_ + _._3)
+      val spans = mine.indices
+        .map(i => mine(i)._2 -> (starts(i), starts(i + 1))).toMap
+      val total = starts.last
+      sorted.filter(col(SideCol) === side).select(col("_rh")).as[Array[Byte]]
+        .mapPartitions(rows => foldChunks(rows, spans, total, chunkSize))
+        .toDF("chunk_id", "_pid", "_n", "_digest", "_part")
+        .groupBy(col("chunk_id"))
+        .agg(
+          sum(col("_n")).as("n_rows"),
+          coalesce(max(col("_digest")), md5(
+            expr("listagg(_part, '|') WITHIN GROUP (ORDER BY _pid)")))
+            .as("digest"))
+    }
   }
 
-  // monotonically_increasing_id: pid << 33 | local index
-  private val LocalIdxBits = 33
-  private val LocalIdxMask = (1L << LocalIdxBits) - 1
+  private val HexDigits = "0123456789abcdef".getBytes(StandardCharsets.US_ASCII)
 
-  /** One layout partition's share of [[chunkDigest]]: rows `(_mid, _rh)`
-    * in layout order in, one row `(chunk_id, pid, n, digest, part)` per
-    * chunk out. A chunk whose rows `[c·size, min((c+1)·size, total))`
+  /** One layout partition's share of a side's digests: the side's `_rh`
+    * values in layout order in, one row `(chunk_id, pid, n, digest, part)`
+    * per chunk out. A chunk whose rows `[c·size, min((c+1)·size, total))`
     * (0-based) all lie in this partition gets its md5 digest; a chunk
     * that reaches past the partition gets its "|"-joined part instead.
+    * Each `_rh` is hex-encoded again first, so both hash the md5 text.
     */
-  private def foldChunks(rows: Iterator[(Long, String)],
-      spans: Map[Long, (Long, Long)], total: Long, chunkSize: Int)
-      : Iterator[(Long, Long, Long, String, String)] = {
-    val in = rows.buffered
-    if (!in.hasNext) return Iterator.empty
-    val pid = in.head._1 >>> LocalIdxBits
+  private def foldChunks(rows: Iterator[Array[Byte]],
+      spans: Map[Int, (Long, Long)], total: Long, chunkSize: Int)
+      : Iterator[(Long, Int, Long, String, String)] = {
+    if (!rows.hasNext) return Iterator.empty
+    val pid = TaskContext.getPartitionId()
     val (first, end) = spans(pid)
-    def chunkOf(mid: Long) = (first + (mid & LocalIdxMask)) / chunkSize
-    new Iterator[(Long, Long, Long, String, String)] {
-      def hasNext: Boolean = in.hasNext
-      def next(): (Long, Long, Long, String, String) = {
-        val c = chunkOf(in.head._1)
+    val hex = new Array[Byte](32)
+    var row = first // global number of the next row
+    new Iterator[(Long, Int, Long, String, String)] {
+      def hasNext: Boolean = rows.hasNext
+      def next(): (Long, Int, Long, String, String) = {
+        require(row < end, s"layout partition $pid holds more rows than counted")
+        val c = row / chunkSize
         val whole = c * chunkSize >= first &&
           math.min((c + 1) * chunkSize, total) <= end
+        val (from, stop) = (row, math.min((c + 1) * chunkSize, end))
         val md = java.security.MessageDigest.getInstance("MD5")
         val part = new java.lang.StringBuilder
-        var n = 0L
-        while (in.hasNext && chunkOf(in.head._1) == c) {
-          val rh = in.next()._2
-          if (whole) {
-            if (n > 0) md.update('|'.toByte)
-            md.update(rh.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          } else {
-            if (n > 0) part.append('|')
-            part.append(rh)
+        while (row < stop) {
+          require(rows.hasNext,
+            s"layout partition $pid holds fewer rows than counted")
+          val rh = rows.next()
+          var i = 0
+          while (i < 16) {
+            hex(2 * i) = HexDigits((rh(i) >> 4) & 0xf)
+            hex(2 * i + 1) = HexDigits(rh(i) & 0xf)
+            i += 1
           }
-          n += 1
+          if (whole) {
+            if (row > from) md.update('|'.toByte)
+            md.update(hex)
+          } else {
+            if (row > from) part.append('|')
+            part.append(new String(hex, StandardCharsets.US_ASCII))
+          }
+          row += 1
         }
         if (whole)
-          (c, pid, n, org.apache.commons.codec.binary.Hex.encodeHexString(
-            md.digest()), null)
-        else (c, pid, n, null, part.toString)
+          (c, pid, stop - from, org.apache.commons.codec.binary.Hex
+            .encodeHexString(md.digest()), null)
+        else (c, pid, stop - from, null, part.toString)
       }
     }
   }

@@ -40,7 +40,11 @@ object ChangeLogReader {
     val df = spark.read
       .option("mergeSchema", mergeSchemas.toString)
       .parquet(files.map(_.path): _*)
-    withOrdering(df)
+    // DMS full-load files carry no Op column unless configured to: a log
+    // of only such files gets a NULL Op, which every reducer reads as an
+    // insert
+    withOrdering(if (df.columns.contains(C.Op)) df
+      else df.withColumn(C.Op, lit(null).cast("string")))
   }
 
   /** Attach ordering columns to a parquet-sourced DataFrame. */

@@ -255,32 +255,106 @@ class CdcJobsSpec extends SparkSpec {
         s"opens: source ${scans.opens(src)}, target ${scans.opens(tgt)}")
 
       // rewrite the source IN PLACE between the two calls — same file
-      // name, new length and mtime: that side re-keys and is read again,
-      // never served from the stale entry; the target is not re-read
+      // name, new length and mtime: the pair re-keys and is read again,
+      // never served from the stale entry
       val source2 = spark.read.parquet(src)
       assert(ValidateJob.validateTable(source2, target, spec).mismatched
         === 1L)
-      val part = new java.io.File(src).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      rows.map { case (i, p, a) => (i, if (i == 20L) "rewritten" else p, a) }
-        .toDF("id", "payload", "amount").coalesce(1)
-        .write.parquet(s"$base/staged")
-      val staged = new java.io.File(s"$base/staged").listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val mtime = part.lastModified()
-      Files.move(staged.toPath, part.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      new java.io.File(part.getParent, s".${part.getName}.crc").delete()
-      assert(part.setLastModified(mtime + 10000L))
+      rewriteInPlace(src,
+        rows.map { case (i, p, a) => (i, if (i == 20L) "rewritten" else p, a) }
+          .toDF("id", "payload", "amount"))
       assert(ValidateJob.validateByDigest(spark.read.parquet(src), target,
         spec, 50) === Seq(0L, 2L))
       org.apache.spark.GraftTestBus.drain(spark.sparkContext)
-      assert(scans.opens(src) === 2 && scans.opens(tgt) === 1,
+      // the cache unit is the (source, target) pair: one layout holds
+      // both sides, so re-filling it after the source changed opens the
+      // unchanged target again too
+      assert(scans.opens(src) === 2 && scans.opens(tgt) === 2,
         s"opens: source ${scans.opens(src)}, target ${scans.opens(tgt)}")
     } finally {
       spark.listenerManager.unregister(scans)
       graft.plans.CachedPlans.clear()
     }
+  }
+
+  /** Replaces the one parquet file under `dir` with `df`'s rows: same
+    * file name, new length, and an mtime 10 s later.
+    */
+  private def rewriteInPlace(dir: String,
+      df: org.apache.spark.sql.DataFrame): Unit = {
+    val part = new java.io.File(dir).listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    val staging = s"${new java.io.File(dir).getParent}/_staged"
+    df.coalesce(1).write.mode("overwrite").parquet(staging)
+    val staged = new java.io.File(staging).listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    val mtime = part.lastModified()
+    Files.move(staged.toPath, part.toPath,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    new java.io.File(part.getParent, s".${part.getName}.crc").delete()
+    assert(part.setLastModified(mtime + 10000L))
+  }
+
+  test("rewriting the target in place re-fills the pair and reports its new rows") {
+    val base = Files.createTempDirectory("scanonce-target").toString
+    val (src, tgt) = (s"$base/source", s"$base/target")
+    val rows = (1L to 200L).map(i => (i, s"v$i", i * 0.5))
+    rows.toDF("id", "payload", "amount").coalesce(1).write.parquet(src)
+    rows.toDF("id", "payload", "amount").coalesce(1).write.parquet(tgt)
+    val spec = TableSpec("t", "", Seq("id"))
+    graft.plans.CachedPlans.clear()
+    val scans = new OpenedScans
+    spark.listenerManager.register(scans)
+    try {
+      val source = spark.read.parquet(src)
+      assert(ValidateJob.validateTable(source, spark.read.parquet(tgt), spec)
+        .ok)
+      // the target drifts in place: id 120 changes, id 200 goes, 201 comes
+      rewriteInPlace(tgt, (rows.filter(_._1 != 200L) :+ ((201L, "v201", 0.0)))
+        .map { case (i, p, a) => (i, if (i == 120L) "drift" else p, a) }
+        .toDF("id", "payload", "amount"))
+      val target = spark.read.parquet(tgt)
+      assert(ValidateJob.validateTable(source, target, spec) ===
+        ValidateJob.TableReport("t", 198L, 1L, 1L, 1L))
+      assert(ValidateJob.validateByDigest(source, target, spec, 50)
+        === Seq(2L, 3L))
+      org.apache.spark.GraftTestBus.drain(spark.sparkContext)
+      assert(scans.opens(src) === 2 && scans.opens(tgt) === 2,
+        s"opens: source ${scans.opens(src)}, target ${scans.opens(tgt)}")
+    } finally {
+      spark.listenerManager.unregister(scans)
+      graft.plans.CachedPlans.clear()
+    }
+  }
+
+  test("full-load-only snapshot of LOAD files without an Op column") {
+    val base = Files.createTempDirectory("noop").toString
+    val tdir = s"$base/db/items"
+    (1L to 30L).map(i => (i, s"v$i")).toDF("id", "v")
+      .coalesce(1).write.parquet(s"$tdir/_w")
+    val part = new java.io.File(s"$tdir/_w").listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    Files.move(part.toPath,
+      java.nio.file.Paths.get(s"$tdir/LOAD00000001.parquet"))
+    org.apache.hadoop.fs.FileSystem.getLocal(
+      spark.sparkContext.hadoopConfiguration)
+      .delete(new org.apache.hadoop.fs.Path(s"$tdir/_w"), true)
+    // with a PK (reduced) and without one (PK-less concatenation)
+    Seq(Seq("--pk", "items=id") -> "pk", Seq.empty[String] -> "nopk")
+      .foreach { case (pk, name) =>
+        val out = s"$base/out_$name"
+        val printed = new java.io.ByteArrayOutputStream
+        val status = Console.withOut(printed) {
+          graft.cli.Main.run((Seq("--base-dir", s"$base/db",
+            "--mode", "full-load-only", "--only-snapshot", "--out", out) ++ pk)
+            .toArray)
+        }
+        assert(status === 0, name)
+        assert(printed.toString.contains(
+          "[snapshot] items: 30 rows reconstructed"), s"$name: $printed")
+        assert(spark.read.parquet(s"$out/items").as[(Long, String)]
+          .collect().toSet === (1L to 30L).map(i => (i, s"v$i")).toSet, name)
+      }
   }
 
   test("snapshot counts its rows without reading its output back") {

@@ -95,7 +95,7 @@ class DiffEngineSpec extends SparkSpec {
 
   /** Row count of each of the side's layout partitions, in pid order. */
   private def layoutSizes(a: DataFrame, pk: String): Seq[Long] =
-    DiffEngine.rowLayout(a, Seq(pk)).rdd
+    DiffEngine.layout(Seq(a), Seq(pk)).rdd
       .mapPartitions(rows => Iterator(rows.size.toLong)).collect().toSeq
 
   private def tenThousand = spark.range(0, 10000)
@@ -126,8 +126,8 @@ class DiffEngineSpec extends SparkSpec {
   }
 
   test("chunk digest over a layout with empty partitions") {
-    // one PK everywhere: rows tie-break on _rh alone, and two distinct
-    // row hashes fill at most two of the range partitions
+    // one PK everywhere: the range partitions are cut on the PK alone,
+    // so every row lands in one of them
     val dup = spark.range(0, 3000)
       .select(lit(7L).as("k"), concat(lit("p"), $"id" % 2).as("v"))
     val sizes = layoutSizes(dup, "k")
@@ -156,10 +156,11 @@ class DiffEngineSpec extends SparkSpec {
     }
   }
 
-  test("chunk digest shuffles one record per chunk plus the cut chunks") {
-    graft.plans.CachedPlans.clear()
-    val a = spark.range(0, 200000)
-      .select(($"id" % 997).as("k"), concat(lit("p"), $"id" % 3).as("v"))
+  /** Runs `body` under a listener that counts the shuffle records
+    * tasks write; the function it gets returns the count since its last
+    * call, after draining the listener bus.
+    */
+  private def withShuffleRecords(body: (() => Long) => Unit): Unit = {
     val written = new java.util.concurrent.atomic.AtomicLong
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onTaskEnd(
@@ -172,7 +173,18 @@ class DiffEngineSpec extends SparkSpec {
       written.getAndSet(0L)
     }
     spark.sparkContext.addSparkListener(listener)
-    try {
+    try body(() => drained())
+    finally {
+      spark.sparkContext.removeSparkListener(listener)
+      graft.plans.CachedPlans.clear()
+    }
+  }
+
+  test("chunk digest shuffles one record per chunk plus the cut chunks") {
+    graft.plans.CachedPlans.clear()
+    val a = spark.range(0, 200000)
+      .select(($"id" % 997).as("k"), concat(lit("p"), $"id" % 3).as("v"))
+    withShuffleRecords { drained =>
       drained()
       val parts = layoutSizes(a, "k").length // fills the layout
       // the listener sees the fill's range exchange ship every row
@@ -183,9 +195,25 @@ class DiffEngineSpec extends SparkSpec {
       val digest = drained()
       assert(digest > 0L && digest <= chunks + 2L * parts,
         s"$digest shuffle records for $chunks chunks over $parts partitions")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      graft.plans.CachedPlans.clear()
+    }
+  }
+
+  test("row statuses shuffle at most 4 records per layout partition") {
+    graft.plans.CachedPlans.clear()
+    val a = spark.range(0, 200000)
+      .select($"id".as("k"), concat(lit("p"), $"id" % 3).as("v"))
+    val b = a.withColumn("v",
+      when($"k" % 1000 === 5, lit("x")).otherwise($"v"))
+    withShuffleRecords { drained =>
+      drained()
+      val parts = DiffEngine.layout(Seq(a, b), Seq("k")).rdd.getNumPartitions
+      // the one fill ships both sides' rows
+      assert(drained() >= 400000L)
+      assert(ValidateJob.validateTable(a, b, TableSpec("t", "", Seq("k"))) ===
+        ValidateJob.TableReport("t", 199800L, 0L, 0L, 200L))
+      val status = drained()
+      assert(status > 0L && status <= 4L * parts,
+        s"$status shuffle records over $parts partitions")
     }
   }
 
@@ -407,6 +435,39 @@ class DiffEngineSpec extends SparkSpec {
       li, li.withColumn("w", lit(1)), TableSpec("t", "", Seq("id"))))
   }
 
+  test("validateTable: a PK typed differently per side keys like rowDiff's join") {
+    // int vs bigint: the join compares the keys at bigint
+    val li = Seq((1, "a"), (2, "b"), (3, "c")).toDF("id", "v")
+    val rl = Seq((1L, "a"), (2L, "B"), (4L, "d")).toDF("id", "v")
+    sameAsRowDiff(li, rl, Seq("id"), Map("match" -> 1L, "mismatch" -> 1L,
+      "only_left" -> 1L, "only_right" -> 1L))
+    // string vs int: the join casts both keys to bigint, so "02" and
+    // " 4" are keys 2 and 4
+    val ls = Seq(("1", "a"), ("02", "b"), ("3", "c"), (" 4", "d"))
+      .toDF("id", "v")
+    val ri = Seq((1, "a"), (2, "b"), (3, "C"), (4, "d"), (5, "e"))
+      .toDF("id", "v")
+    sameAsRowDiff(ls, ri, Seq("id"), Map("match" -> 3L, "mismatch" -> 1L,
+      "only_right" -> 1L))
+    // a key that does not cast fails both the same way
+    val bad = Seq(("x", "a")).toDF("id", "v")
+    intercept[NumberFormatException](
+      DiffEngine.summarize(DiffEngine.rowDiff(bad, ri, Seq("id"))).collect())
+    intercept[NumberFormatException](
+      ValidateJob.validateTable(bad, ri, TableSpec("t", "", Seq("id"))))
+  }
+
+  test("validateTable: double PKs -0.0 = 0.0 and NaN = NaN, as the join keys them") {
+    val schema = StructType(Seq(StructField("k", DoubleType),
+      StructField("v", StringType)))
+    val l = frame(schema, Seq(Row(-0.0, "a"), Row(Double.NaN, "b"),
+      Row(1.5, "c"), Row(null, "d")))
+    val r = frame(schema, Seq(Row(0.0, "a"), Row(Double.NaN, "B"),
+      Row(1.5, "c"), Row(null, "d")))
+    sameAsRowDiff(l, r, Seq("k"), Map("match" -> 2L, "mismatch" -> 1L,
+      "only_left" -> 1L, "only_right" -> 1L))
+  }
+
   test("validateTable equals summarize(rowDiff) on seeded random frames") {
     val rnd = new scala.util.Random(20261019L)
     val schema = StructType(Seq(StructField("k", LongType),
@@ -451,7 +512,7 @@ class DiffEngineSpec extends SparkSpec {
     try {
       val a = spark.range(0, 20000)
         .select(($"id" % 4999).as("k"), concat(lit("p"), $"id" % 7).as("v"))
-      assert(DiffEngine.rowLayout(a, Seq("k")).rdd.getNumPartitions ===
+      assert(DiffEngine.layout(Seq(a), Seq("k")).rdd.getNumPartitions ===
         spark.sparkContext.defaultParallelism)
       // digests equal the layout-free reference, which the
       // 200-partition layout matched too

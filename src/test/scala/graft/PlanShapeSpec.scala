@@ -140,6 +140,27 @@ class PlanShapeSpec extends SparkSpec {
       s"shuffle must key on chunk_id: ${ex.head.outputPartitioning}")
   }
 
+  test("row statuses count in place over the paired layout: no PK exchange") {
+    val l = (1L to 5000L).map(i => (i, s"p$i")).toDF("id", "payload")
+    val r = l.withColumn("payload",
+      when($"id" === 7L, lit("x")).otherwise($"payload"))
+    // validateTable's status plan reads the one cached layout of both
+    // sides, already range-partitioned on the PK: no join, and no
+    // exchange keyed on the PK
+    val status = DiffEngine.statusCounts(l, r, Seq("id"))
+    assert(plan(status).collect {
+      case m: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => m
+    }.nonEmpty, "statusCounts does not read the cached layout")
+    shuffles(status).foreach { s =>
+      val keyed = s.outputPartitioning match {
+        case e: org.apache.spark.sql.catalyst.expressions.Expression =>
+          e.references.exists(_.name == "id")
+        case _ => false
+      }
+      assert(!keyed, s"status plan shuffles on the PK: ${s.outputPartitioning}")
+    }
+  }
+
   test("pipeline_e2e capstone: keyed joins only, no funnels, scans bounded") {
     val df = graft.queries.PipelineQueries
       .pipelineE2e(spark, "/root/testdata/sf0.001")
